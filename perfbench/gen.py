@@ -29,21 +29,12 @@ VOCAB = ("spark batch part line column order small sort fast value scan hash "
 LANGS = ["en", "en", "en", "de", "fr", "es", "zh"]
 BASE_EPOCH_S = 1_704_067_200  # 2024-01-01T00:00:00Z
 
-# Workload sizes. Each is fixed across seeds so only content varies. The
-# refresh cycles cover every cycle a run can reach (Main.MaxCycles).
-SIZES = {
-    "refresh-daily": {"docs": 200, "cycles": 8, "delta": 0.02},
-    "serve-mix": {"docs": 200, "cycles": 1, "delta": 0.02, "rounds": 4},
-}
-# Share of each cycle's delta: new, modified, touched (same minute, so
-# unchanged under the minute-floor rule), deleted.
-DELTA_MIX = {"new": 0.3, "modified": 0.3, "touched": 0.2, "deleted": 0.2}
-# serve-mix round: each analytics query once (Serve.Analytics in the JVM),
-# plus ANN and BM25 probes; every 10th op is an index write.
-N_ANALYTICS = 6
-ROUND_ANN = 3
-ROUND_BM25 = 3
-WRITE_EVERY = 10
+# Workload parameters, each with its source and reason: workloads.json.
+with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                       "workloads.json")) as _f:
+    PARAMS = {w: {k: v["value"] for k, v in p.items()}
+              for w, p in json.load(_f).items() if w not in ("_doc", "common")}
+WORKLOADS = list(PARAMS)
 
 
 def _text(rng):
@@ -84,9 +75,9 @@ def _content(files, keys):
     })
 
 
-def gen_refresh(rng, out, n_docs, n_cycles, delta):
+def gen_refresh(rng, out, n_docs, n_cycles, delta, delta_mix):
     """Cycle 0 is the initial load; each later cycle applies a delta of
-    about `delta` of the live corpus."""
+    about `delta` of the live corpus, split by the shares of `delta_mix`."""
     files = {}
     for k in range(n_docs):
         # whole minutes plus 0-29 s: a touch of 1-30 s stays in the minute
@@ -104,7 +95,7 @@ def gen_refresh(rng, out, n_docs, n_cycles, delta):
         if c > 0:
             now += 24 * 3600
             n = max(1, round(len(files) * delta))
-            want = {m: round(n * s) for m, s in DELTA_MIX.items()}
+            want = {m: round(n * s) for m, s in delta_mix.items()}
             live = sorted(files)
             pick = rng.permutation(len(live))
             cursor = 0
@@ -148,7 +139,7 @@ def gen_refresh(rng, out, n_docs, n_cycles, delta):
         json.dump(expected, f, sort_keys=True)
 
 
-def gen_sf(rng, out, n_orders=3000):
+def gen_sf(rng, out, n_orders):
     """TPC-H-shaped analytics tables (schemas of the engine's testdata)."""
     d = os.path.join(out, "sf")
     n_cust, n_part, n_supp = n_orders // 10, 400, 20
@@ -249,37 +240,46 @@ def gen_sf(rng, out, n_orders=3000):
         os.path.join(d, "embeddings.parquet"))
 
 
-def gen_ops(rng, rounds):
+def gen_ops(rng, p):
     """Closed-loop op stream as rounds of a fixed mix: every analytics query
-    once, ROUND_ANN ANN probes, ROUND_BM25 BM25 probes, in seeded order,
-    with an index write after every WRITE_EVERY - 1 reads. Op shapes:
-    ["ann", rank, seed] perturbs the live vector of Zipf popularity `rank`
-    with noise `seed`; ["bm25", term, ...]; ["sql", i] runs analytics
-    query i; ["write", seed] upserts a seeded batch of new vectors."""
+    once, `ann_per_round` ANN probes and `bm25_per_round` BM25 probes, in
+    seeded order, with an index write after every `write_every` - 1 reads.
+    One round more than `timed_rounds` is generated; the last one is the
+    set-up warm-up. Op shapes: ["ann", rank, seed] perturbs the live vector
+    of Zipf popularity `rank` with noise `seed`; ["bm25", term, ...];
+    ["sql", i, 0] runs analytics query i; ["write", seed, n] upserts a
+    seeded batch of n new vectors."""
     out = []
-    for _ in range(rounds):
-        reads = [["sql", int(i), 0] for i in rng.permutation(N_ANALYTICS)]
-        for _ in range(ROUND_ANN):
-            reads.append(["ann", int(rng.zipf(1.3)) - 1, int(rng.integers(0, 2**31))])
-        for _ in range(ROUND_BM25):
-            reads.append(["bm25"] + sorted({VOCAB[i] for i in
-                                            rng.integers(0, len(VOCAB), 2)}))
+    every = p["write_every"]
+    for _ in range(p["timed_rounds"] + 1):
+        reads = [["sql", int(i), 0] for i in rng.permutation(p["analytics_per_round"])]
+        for _ in range(p["ann_per_round"]):
+            reads.append(["ann", int(rng.zipf(p["zipf_a"])) - 1,
+                          int(rng.integers(0, 2**31))])
+        for _ in range(p["bm25_per_round"]):
+            terms = rng.choice(len(VOCAB), size=p["bm25_terms"], replace=False)
+            reads.append(["bm25"] + sorted(VOCAB[i] for i in terms))
         ops = []
         for i in rng.permutation(len(reads)):
             ops.append(reads[i])
-            if len(ops) % WRITE_EVERY == WRITE_EVERY - 1:
-                ops.append(["write", int(rng.integers(0, 2**31)), 0])
+            if len(ops) % every == every - 1:
+                ops.append(["write", int(rng.integers(0, 2**31)), p["write_batch"]])
         out.append(ops)
     return out
 
 
 def generate(workload, seed, out):
-    if workload not in SIZES:
+    if workload not in PARAMS:
         raise ValueError(f"unknown workload {workload!r}")
-    size = SIZES[workload]
-    rng = np.random.default_rng([seed, list(SIZES).index(workload)])
-    gen_refresh(rng, out, size["docs"], size["cycles"], size["delta"])
-    if workload == "serve-mix":
-        gen_sf(rng, out)
+    p = PARAMS[workload]
+    rng = np.random.default_rng([seed, WORKLOADS.index(workload)])
+    if workload == "refresh-daily":
+        # cycle 0 is the initial load, in set-up
+        gen_refresh(rng, out, p["docs"], 1 + p["timed_cycles"], p["delta"],
+                    p["delta_mix"])
+    else:
+        # serve-mix serves the state of one initial load
+        gen_refresh(rng, out, p["docs"], 1, 0.0, {})
+        gen_sf(rng, out, p["orders"])
         with open(os.path.join(out, "ops.json"), "w") as f:
-            json.dump(gen_ops(rng, size["rounds"]), f)
+            json.dump(gen_ops(rng, p), f)

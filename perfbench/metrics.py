@@ -135,16 +135,18 @@ def layer_breakdown(trace, exclude=("check",)):
 
 
 def coverage(trace, parent="cycle"):
-    """Share of each `parent` span covered by its direct child spans."""
+    """Share of each `parent` span covered by its direct child spans. Child
+    `check` spans (untimed heap samples) are left out of both sides."""
     spans = trace["spans"]
     tops = [s for s in spans if s[2] == parent]
     if not tops:
         return None
     covered = total = 0.0
     for p in tops:
-        kids = [(c[4], c[5]) for c in spans if c[1] == p[0]]
-        covered += length(kids)
-        total += p[5] - p[4]
+        kids = [c for c in spans if c[1] == p[0]]
+        checks = [(c[4], c[5]) for c in kids if c[2] == "check"]
+        covered += length(subtract([(c[4], c[5]) for c in kids], checks))
+        total += p[5] - p[4] - length(checks)
     return covered / total if total else None
 
 

@@ -3,7 +3,7 @@
 
 Usage, from the root of a checkout:
 
-  python3 perfbench/run.py --workload refresh-daily --seed 1 --seconds 10 --trace 0
+  python3 perfbench/run.py --workload refresh-daily --seed 1 --seconds 12 --trace 0
 
 Builds the engine from the checkout's sources (once; the build is cached in
 .bench_build/ and redone when a source changes), generates the workload's
@@ -14,6 +14,10 @@ outputs and prints a report followed by one JSON line:
 
 --trace 0 reports the end-to-end metrics, --trace 1 the per-layer metrics
 of BENCHMARK.json. The exit code is non-zero when any check fails.
+
+The timed work is a fixed set of units (workloads.json: `timed_cycles`,
+`timed_rounds`), sized to about --seconds on a 4-core host, so every commit
+times the same cycles and ops; --seconds does not cut the loop.
 """
 import argparse
 import hashlib
@@ -95,13 +99,13 @@ def build():
     return open(cp_file).read().strip()
 
 
-def run_jvm(classpath, workload, inputs, work, seconds, trace):
+def run_jvm(classpath, workload, inputs, work, trace):
     result = os.path.join(work, "result.json")
     cmd = ["java", "-Xmx3g", "-XX:+UseG1GC", "-Duser.timezone=UTC"]
     for p in ADD_OPENS:
         cmd += ["--add-opens", f"java.base/{p}=ALL-UNNAMED"]
     cmd += ["-cp", classpath, "graft.perfbench.Main", workload, inputs, work,
-            str(seconds), str(trace), result]
+            str(trace), result]
     log = os.path.join(work, "jvm.log")
     with open(log, "w") as err:
         proc = subprocess.Popen(cmd, stdout=err, stderr=subprocess.STDOUT,
@@ -122,19 +126,17 @@ def run_jvm(classpath, workload, inputs, work, seconds, trace):
 
 # ------------------------------------------------------------------ metrics
 
+SERVE_KINDS = ("analytics_ms", "ann_probe_ms", "bm25_probe_ms", "write_ms")
+
+
 def cycle_s(s):
-    """Median refresh cycle. For serve-mix, a round's time with its ANN and
-    BM25 probes each counted at their kind's median latency, so one stalled
-    probe does not set it; analytics queries (each a different query) and
-    writes count as measured."""
+    """Median refresh cycle. For serve-mix, a round's time: the sum of its
+    ops' measured latencies, so every probe counts, the one after a write
+    too; the check work between ops (recall, raw-store write) stays out."""
     if "analytics_ms" not in s:
         return M.median(s["cycle_s"])
     rounds = len(s["cycle_s"])
-    probes = sum(len(s[k]) * M.median(s[k]) for k in ("ann_probe_ms", "bm25_probe_ms"))
-    return (sum(s["analytics_ms"]) + sum(s.get("write_ms", [])) + probes) / rounds / 1e3
-
-
-SERVE_KINDS = ("analytics_ms", "ann_probe_ms", "bm25_probe_ms", "write_ms")
+    return sum(sum(s.get(k, [])) for k in SERVE_KINDS) / rounds / 1e3
 
 
 def end_to_end(res):
@@ -164,9 +166,14 @@ def per_layer(res, workload):
     trace = res["trace"]
     lay = M.layer_breakdown(trace, exclude=("check", "rebuild"))
     traced_cycles = s.get("traced_cycle_s", [])
-    # serve-mix times single ops; its unit for per-cycle totals is a round
-    # of which half the ops were traced
-    units = len(traced_cycles) if workload != "serve-mix" else 0.5 * len(s.get("cycle_s", []))
+    # serve-mix times single ops; its unit for per-cycle totals is a round,
+    # scaled by the share of its ops that were traced
+    if workload == "serve-mix":
+        n_traced = sum(len(s.get("traced_" + k, [])) for k in SERVE_KINDS)
+        n_ops = n_traced + sum(len(s.get(k, [])) for k in SERVE_KINDS)
+        units = len(s.get("cycle_s", [])) * n_traced / n_ops if n_ops else 0
+    else:
+        units = len(traced_cycles)
     units = units or 1
 
     def per_unit(x):
@@ -265,7 +272,7 @@ def overhead(s):
 
 def main():
     ap = argparse.ArgumentParser()
-    ap.add_argument("--workload", required=True, choices=list(gen.SIZES))
+    ap.add_argument("--workload", required=True, choices=gen.WORKLOADS)
     ap.add_argument("--seed", type=int, required=True)
     ap.add_argument("--seconds", type=float, required=True)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
@@ -278,7 +285,7 @@ def main():
     os.makedirs(work)
     try:
         gen.generate(a.workload, a.seed, inputs)
-        res = run_jvm(classpath, a.workload, inputs, work, a.seconds, a.trace)
+        res = run_jvm(classpath, a.workload, inputs, work, a.trace)
         problems = [f"{c['name']}: {c['detail']}" for c in res["checks"] if not c["ok"]]
         expected = json.load(open(os.path.join(inputs, "refresh", "expected.json")))
         for c in res["counts"]:
@@ -307,6 +314,11 @@ def main():
                     lines += report_latency(s, key, label)
             lines.append(f"failed_ratio = {failed / max(1, attempted):.4f} "
                          f"[{failed} of {attempted}]")
+            lines.append(f"phases: set-up {v['setup_s']:.1f} s, timed loop "
+                         f"{v['measure_s']:.1f} s, checks "
+                         f"{v['jvm_s'] - v['setup_s'] - v['measure_s']:.1f} s")
+            lines.append(f"live_heap_mb is the peak of {v['heap_samples']} "
+                         f"post-GC samples ({v['heap_sample_s']:.2f} s, untimed)")
         for k, (val, unit) in ms.items():
             lines.append(f"{k} = {val:.6g} {unit}")
         for p in problems:

@@ -8,10 +8,11 @@ import graft.enrich.{CachingEnricher, CostMeter, DeterministicEnricher, Enricher
 
 /** Benchmark entry point: one JVM, one client thread, `local[<cores>]` Spark.
   *
-  * Usage: Main <workload> <inputs> <work> <seconds> <trace 0|1> <result.json>
+  * Usage: Main <workload> <inputs> <work> <trace 0|1> <result.json>
   *
-  * Phases: set-up (session, warm-up, state build), then a closed loop of
-  * timed operations for `seconds`, then correctness checks. Check work is
+  * Phases: set-up (session, warm-up, state build), then a closed loop over
+  * a fixed set of timed units (the refresh cycles or serve rounds the
+  * inputs hold beyond set-up), then correctness checks. Check work is
   * never timed. The result file holds raw samples and counts; `run.py`
   * turns them into metrics and verdicts.
   */
@@ -49,17 +50,50 @@ object Main {
   def gcSeconds: Double =
     ManagementFactory.getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).sum / 1e3
 
-  /** Driver heap retained after a full collection. A second collection
-    * after a pause lets Spark's ContextCleaner drop the blocks of
-    * broadcasts and shuffles the first one found unreachable. */
-  def liveHeapMb(): Double = {
-    System.gc()
-    Thread.sleep(300)
-    System.gc()
-    ManagementFactory.getMemoryPoolMXBeans.asScala
-      .filter(_.getType == java.lang.management.MemoryType.HEAP)
-      .flatMap(p => Option(p.getCollectionUsage)).map(_.getUsed).sum / 1048576.0
+  /** Peak driver heap after GC over the timed loop. [[sample]] forces a
+    * full collection after a timed unit (a refresh stage, a serve op) and
+    * keeps the largest heap the collection usage of the MX beans reports.
+    * Samples run outside the timed region: `spentS` is their time, which
+    * the loop takes out of a cycle that samples inside it, and `gcS` the
+    * collection time they force, which `gc_s` leaves out. */
+  final class HeapPeak {
+    var peakMb = 0.0
+    var spentS = 0.0
+    var gcS = 0.0
+    var samples = 0
+    private def afterGcMb: Double =
+      ManagementFactory.getMemoryPoolMXBeans.asScala
+        .filter(_.getType == java.lang.management.MemoryType.HEAP)
+        .flatMap(p => Option(p.getCollectionUsage)).map(_.getUsed).sum / 1048576.0
+    def sample(): Unit = {
+      val t0 = System.nanoTime()
+      val gc0 = gcSeconds
+      System.gc()
+      var mb = afterGcMb
+      // a second collection after a short pause, once Spark's ContextCleaner
+      // has dropped the blocks of broadcasts the first one found unreachable,
+      // can only lower the reading, so only a new peak needs it
+      if (mb > peakMb) {
+        Thread.sleep(100)
+        System.gc()
+        mb = afterGcMb
+      }
+      gcS += gcSeconds - gc0
+      peakMb = math.max(peakMb, mb)
+      samples += 1
+      spentS += secs(t0)
+    }
+    def record(res: Result): Unit = {
+      res.values("live_heap_mb") = peakMb
+      res.values("heap_samples") = samples
+      res.values("heap_sample_s") = spentS
+    }
   }
+
+  /** The result file's JSON codec (Jackson with Scala collections). */
+  val json: com.fasterxml.jackson.databind.ObjectMapper =
+    new com.fasterxml.jackson.databind.ObjectMapper()
+      .registerModule(com.fasterxml.jackson.module.scala.DefaultScalaModule)
 
   def delete(spark: SparkSession, dir: String): Unit = {
     val p = new org.apache.hadoop.fs.Path(dir)
@@ -67,8 +101,7 @@ object Main {
   }
 
   def main(args: Array[String]): Unit = {
-    val Array(workload, inputs, work, secondsArg, traceArg, out) = args
-    val seconds = secondsArg.toDouble
+    val Array(workload, inputs, work, traceArg, out) = args
     val trace = traceArg == "1"
     graft.LogProfiles.quietBench()
     val startMs = ManagementFactory.getRuntimeMXBean.getStartTime
@@ -90,8 +123,8 @@ object Main {
     res.values("session_s") = sessionS
     try {
       workload match {
-        case "refresh-daily" => refreshDaily(spark, inputs, work, seconds, trace, res)
-        case "serve-mix" => Serve.run(spark, inputs, work, seconds, trace, res)
+        case "refresh-daily" => refreshDaily(spark, inputs, work, trace, res)
+        case "serve-mix" => Serve.run(spark, inputs, work, trace, res)
         case other => throw new IllegalArgumentException(s"unknown workload $other")
       }
     } catch {
@@ -99,14 +132,15 @@ object Main {
         e.printStackTrace()
         res.checks += (("run_completed", false, s"${e.getClass.getName}: ${e.getMessage}"))
     }
+    res.values("jvm_s") = (System.currentTimeMillis() - startMs) / 1e3
     val body = Map[String, Any](
       "values" -> res.values,
       "samples" -> res.samples.map { case (k, v) => k -> v.toSeq },
       "counts" -> res.counts.toSeq,
       "checks" -> res.checks.map { case (n, ok, d) =>
         Map("name" -> n, "ok" -> ok, "detail" -> d) },
-      "trace" -> Json.RawJson(if (trace) Trace.json else "null"))
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(out), Json.value(body))
+      "trace" -> (if (trace) Trace.data else null))
+    json.writeValue(new java.io.File(out), body)
     spark.stop()
   }
 
@@ -115,8 +149,10 @@ object Main {
   def contentOf(spark: SparkSession, inputs: String, c: Int): DataFrame =
     spark.read.parquet(f"$inputs/refresh/cycle_$c%04d/content.parquet")
 
-  val MaxCycles = 8
-  val MinCycles = 2
+  /** Refresh cycles in the inputs: cycle 0 (initial load), then the timed
+    * incremental cycles. */
+  def cyclesIn(inputs: String): Int =
+    new java.io.File(s"$inputs/refresh").list().count(_.startsWith("cycle_"))
 
   /** In a traced run every other timed unit runs untraced; samples of the
     * traced units carry a `traced_` prefix so both halves can be compared
@@ -146,33 +182,37 @@ object Main {
   }
 
   def refreshDaily(spark: SparkSession, inputs: String, work: String,
-      seconds: Double, trace: Boolean, res: Result): Unit = {
+      trace: Boolean, res: Result): Unit = {
     val sessionS = res.values("session_s").asInstanceOf[Double]
-    // set-up: the session, the initial full load (cycle 0) and the untimed
-    // first incremental cycle, which carry the JIT warm-up of both paths
-    val (r, en, built) = buildState(spark, inputs, s"$work/state", 2)
+    // set-up: the session and the initial full load (cycle 0), which warms
+    // every stage but the incremental merges; those warm up inside the
+    // timed cycles, the same way on every run
+    val (r, en, built) = buildState(spark, inputs, s"$work/state", 1)
     res.values("setup_s") = sessionS + built
     val gc0 = gcSeconds
     val req0 = en.requestCount
     val miss0 = en.missCount
-    var c = 2
+    val heap = new HeapPeak
+    r.afterStage = () => Trace.span("check")(heap.sample())
+    val last = cyclesIn(inputs) - 1
     val t0 = System.nanoTime()
-    while ((secs(t0) < seconds || c < 2 + MinCycles) && c < MaxCycles) {
+    // the same cycles on every run: cycles 2, 4, ... traced in a traced run
+    (1 to last).foreach { c =>
       val traced = trace && c % 2 == 0
       Trace.set(spark, traced)
-      res.add(unitKey("cycle_s", traced),
-        timed(r.run(c, listingOf(spark, inputs, c), contentOf(spark, inputs, c)))._2)
+      val sampling0 = heap.spentS
+      val (_, wall) = timed(r.run(c, listingOf(spark, inputs, c), contentOf(spark, inputs, c)))
+      res.add(unitKey("cycle_s", traced), wall - (heap.spentS - sampling0))
       Trace.set(spark, false)
       recordStaging(res, traced)
-      if (c >= 3) delete(spark, r.stageDir(c - 2))
-      c += 1
+      if (c >= 2) delete(spark, r.stageDir(c - 2))
     }
+    r.afterStage = () => ()
     res.values("measure_s") = secs(t0)
-    res.values("gc_s") = gcSeconds - gc0
+    res.values("gc_s") = gcSeconds - gc0 - heap.gcS
     res.values("enrich_requests") = en.requestCount - req0
     res.values("enrich_misses") = en.missCount - miss0
-    res.values("live_heap_mb") = liveHeapMb()
-    val last = c - 1
+    heap.record(res)
     // conservation counts of the last timed cycle (the cycles before it are
     // covered by the comparison with the from-scratch rebuild below)
     res.counts += Checks.cycleCounts(spark, r, last, listingOf(spark, inputs, last),

@@ -40,6 +40,10 @@ final class Refresh(spark: SparkSession, val state: String, enricher: Enricher) 
   val annDir = s"$state/ann"
   def stageDir(c: Int): String = f"$state/stages/c$c%04d"
 
+  /** Called after each top-level stage of a cycle (the timed loop samples
+    * the heap there). */
+  var afterStage: () => Unit = () => ()
+
   private def fs = new Path(state).getFileSystem(spark.sparkContext.hadoopConfiguration)
   def exists(p: String): Boolean = fs.exists(new Path(p))
 
@@ -66,7 +70,7 @@ final class Refresh(spark: SparkSession, val state: String, enricher: Enricher) 
     Trace.span("cycle", c) {
       val sd = stageDir(c)
       val ts = f"c$c%04d"
-      Trace.span("cdc", c) {
+      stage("cdc", c) {
         val classified = Cdc.classify(listing, readCatalog())
         Artifacts.writeJsonArray(Cdc.toProcess(classified), Seq("file_name"),
           s"$sd/stage01_process.json")
@@ -75,7 +79,7 @@ final class Refresh(spark: SparkSession, val state: String, enricher: Enricher) 
       }
       val process = readJsonList(s"$sd/stage01_process.json", processSchema)
       val deletes = readJsonList(s"$sd/stage01_delete.json", deleteSchema)
-      Trace.span("upsert", c) {
+      stage("upsert", c) {
         val fresh = process.select(col("file_name"), col("file_path"),
           regexp_extract(col("file_path"), "^/nas/([^/]+)/", 1).as("document_source"),
           lit("manual").as("document_type"),
@@ -88,7 +92,7 @@ final class Refresh(spark: SparkSession, val state: String, enricher: Enricher) 
             Seq("id"), catalogDir, "catalog_master", "catalog_deploy", ts)
         }
       }
-      Trace.span("docpipe", c) {
+      stage("docpipe", c) {
         val docs = process.join(content, Seq("file_name"))
           .select(col("doc_key"), col("text")).as[(Long, String)]
         overwrite(docs.flatMap { case (k, t) => FixtureCorpus.pages(k, t) }.toDF(),
@@ -96,7 +100,7 @@ final class Refresh(spark: SparkSession, val state: String, enricher: Enricher) 
         overwrite(DocPipeline.correctSectionPages(DocPipeline.pagesToSections(
           pages(sd))).toDF(), s"$sd/stage02_sections")
       }
-      Trace.span("enrich", c) {
+      stage("enrich", c) {
         val summaries = EnrichStages.enrichPages(pages(sd), enricher)
           .groupBy(col("document_id"), col("chapter_number"))
           .agg(first(col("chapter_summary")).as("chapter_summary_agg"))
@@ -108,17 +112,17 @@ final class Refresh(spark: SparkSession, val state: String, enricher: Enricher) 
           .withColumnRenamed("chapter_summary_agg", "chapter_summary"),
           s"$sd/stage02b_sections")
       }
-      Trace.span("docpipe", c) {
+      stage("docpipe", c) {
         val sections = spark.read.parquet(s"$sd/stage02b_sections")
           .as(Encoders.product[SectionRecord])
         overwrite(DocPipeline.correctChunkPages(
           DocPipeline.sectionsToChunks(sections)).toDF(), s"$sd/stage03_chunks")
       }
-      Trace.span("enrich", c) {
+      stage("enrich", c) {
         overwrite(EnrichStages.embedChunks(chunks(sd), enricher).toDF(),
           s"$sd/stage04_embedded")
       }
-      Trace.span("export", c) {
+      stage("export", c) {
         val emb = spark.read.parquet(s"$sd/stage04_embedded")
           .select(col("document_id"), col("chapter_number"),
             col("section_number"), col("chunk_number"), col("embedding"))
@@ -135,13 +139,18 @@ final class Refresh(spark: SparkSession, val state: String, enricher: Enricher) 
             exportOrder, exportDir, "iris_semantic_search", "iris_deploy", ts)
         }
       }
-      Trace.span("ann.write", c) {
+      stage("ann.write", c) {
         val delta = vectors(sd)
         if (IndexVersioning.committedVersions(spark, annDir).isEmpty)
           AnnIndex.save(delta, annDir)
         else AnnIndex.upsert(delta, annDir)
       }
     }
+
+  private def stage(name: String, c: Int)(f: => Unit): Unit = {
+    Trace.span(name, c)(f)
+    afterStage()
+  }
 
   private def pages(sd: String) =
     spark.read.parquet(s"$sd/stage01_pages").as(Encoders.product[PageRecord])

@@ -8,12 +8,13 @@ import graft.ops.{AnnIndex, InvertedIndex, KeywordSearch}
 
 /** serve-mix: one closed-loop client against a state published in set-up.
   *
-  * The seeded op stream (`ops.json`) is a sequence of rounds; a round is
-  * every analytics query once (run to the `noop` sink), three ANN top-k
-  * probes and three BM25 probes in seeded order, with an `AnnIndex.upsert`
-  * of new chunk vectors as every 10th op. Reads and writes hit
-  * the same index, so a write path that deepens the version chain shows
-  * up in probe latency.
+  * The seeded op stream (`ops.json`, mix and sizes in `workloads.json`) is
+  * a sequence of rounds; a round is every analytics query once (run to the
+  * `noop` sink), ANN top-k probes and BM25 probes in seeded order, with an
+  * `AnnIndex.upsert` of new chunk vectors as every `write_every`-th op.
+  * All rounds but the last are timed; the last is the set-up warm-up.
+  * Reads and writes hit the same index, so a write path that deepens the
+  * version chain shows up in probe latency.
   *
   * The raw-vector store the ANN re-rank joins against has no delete, like
   * the index itself. Recall is judged against exact top-k over the live
@@ -33,13 +34,11 @@ object Serve {
   val NProbe = 8
   val Refine = 10
   val RecallFloor = 0.5
-  val WriteBatch = 20
 
   final case class Op(kind: String, a: Long, b: Long, terms: Seq[String])
 
   def readRounds(path: String): IndexedSeq[IndexedSeq[Op]] = {
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper
-    val root = mapper.readTree(new java.io.File(path))
+    val root = Main.json.readTree(new java.io.File(path))
     (0 until root.size()).map { r =>
       val round = root.get(r)
       (0 until round.size()).map { i =>
@@ -73,7 +72,7 @@ object Serve {
     u.map(x => (x + rnd.nextGaussian() * sigma).toFloat)
   }
 
-  def run(spark: SparkSession, inputs: String, work: String, seconds: Double,
+  def run(spark: SparkSession, inputs: String, work: String,
       trace: Boolean, res: Main.Result): Unit = {
     import spark.implicits._
     val sfDir = s"$inputs/sf"
@@ -126,7 +125,7 @@ object Serve {
 
     def write(op: Op): Double = {
       val rnd = new java.util.Random(op.a)
-      val rows = (0 until WriteBatch).map { _ =>
+      val rows = (0 until op.b.toInt).map { _ =>
         val src = liveRaw(liveKeys(rnd.nextInt(liveKeys.size)))
         nextId += 1
         (nextId, perturb(src, rnd.nextLong(), 1.0 / math.sqrt(src.length)))
@@ -153,7 +152,7 @@ object Serve {
     }
 
     // warm-up of the probe and write paths (set-up time): one of each op
-    // kind from the last round of the stream, which a run never reaches
+    // kind from the last round of the stream, which is never timed
     val (_, warm) = Main.timed {
       val spare = rounds.last
       Seq("ann", "bm25", "write").foreach { k =>
@@ -167,21 +166,25 @@ object Serve {
     }
     res.values("setup_s") = sessionS + built + serving + warm
 
-    // ---- measured closed loop: whole rounds until `seconds` have passed
+    // ---- measured closed loop: every round but the warm-up one, each op
+    // followed by an untimed heap sample
     val gc0 = Main.gcSeconds
+    val heap = new Main.HeapPeak
     var attempted, failed = 0
     val recalls = ArrayBuffer.empty[Double]
     var bm25Checked: Option[Seq[String]] = None
-    var round = 0
+    val kindSeen = scala.collection.mutable.HashMap.empty[String, Int]
     val t0 = System.nanoTime()
-    // a round starts only if it is expected to end within `seconds`, so the
-    // number of rounds does not hinge on a few ms around the deadline
-    var lastRound = 0.0
-    while ((round == 0 || Main.secs(t0) + lastRound <= seconds) && round < rounds.size - 1) {
+    rounds.init.foreach { ops =>
       val roundStart = System.nanoTime()
-      rounds(round).foreach { op =>
+      val sampling0 = heap.spentS
+      ops.foreach { op =>
         attempted += 1
-        val traced = trace && attempted % 2 == 0
+        // in a traced run the ops of each kind alternate, the first traced,
+        // so every kind feeds its layer metrics and the overhead ratio
+        val seen = kindSeen.getOrElse(op.kind, 0)
+        kindSeen(op.kind) = seen + 1
+        val traced = trace && seen % 2 == 0
         Trace.set(spark, traced)
         def add(k: String, ms: Double) = res.add(Main.unitKey(k, traced), ms)
         op.kind match {
@@ -206,21 +209,16 @@ object Serve {
         }
         Trace.set(spark, false)
         Main.recordStaging(res, traced)
+        heap.sample()
       }
-      lastRound = Main.secs(roundStart)
-      res.add("cycle_s", lastRound)
-      round += 1
+      res.add("cycle_s", Main.secs(roundStart) - (heap.spentS - sampling0))
     }
     res.values("measure_s") = Main.secs(t0)
-    res.values("gc_s") = Main.gcSeconds - gc0
+    res.values("gc_s") = Main.gcSeconds - gc0 - heap.gcS
     res.values("attempted") = attempted
     res.values("failed") = failed
     res.values("recall_at_k") = if (recalls.isEmpty) 0.0 else recalls.sum / recalls.size
-    // release what the last analytics query staged, as the next query's
-    // entry would, so the heap reading does not depend on which query the
-    // seeded order ran last (the count is in staging.pending_transients)
-    graft.ops.Checkpoints.releaseTransients()
-    res.values("live_heap_mb") = Main.liveHeapMb()
+    heap.record(res)
     val (_, depth) = Checks.indexHead(spark, r.annDir)
     res.values("ann_chain_depth") = depth
     val idx = Checks.indexIds(spark, r.annDir).select(col("vec_id")).distinct()

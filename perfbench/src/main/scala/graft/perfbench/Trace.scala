@@ -11,7 +11,7 @@ import scala.collection.mutable.ArrayBuffer
   * listener attributes each job (and its tasks) to the span that submitted
   * it. Nothing is written
   * until the run ends: spans and task records stay in memory, then
-  * [[Trace.json]] renders them for the report.
+  * [[Trace.data]] hands them to the result file.
   */
 object Trace {
   final case class Span(id: Int, parent: Int, name: String, op: Long,
@@ -101,52 +101,12 @@ object Trace {
     }
   }
 
-  private def q(s: String): String = Json.str(s)
-
-  /** Spans, jobs and tasks as one JSON object (compact arrays). */
-  def json: String = Listener.synchronized {
-    val sp = spans.map(s =>
-      s"[${s.id},${s.parent},${q(s.name)},${s.op},${s.startMs},${s.endMs}]")
-    val jb = jobs.map(j =>
-      s"[${j.id},${j.span},${j.startMs},${j.endMs},${q(j.callSite)},${j.nStages}]")
-    val tk = tasks.map(t =>
-      s"[${t.span},${t.stage},${t.launchMs},${t.finishMs},${t.runMs}," +
-        s"${t.shuffleWrite},${t.shuffleRead},${t.spill},${if (t.failed) 1 else 0}]")
-    s"""{"spans":[${sp.mkString(",")}],"jobs":[${jb.mkString(",")}],""" +
-      s""""tasks":[${tk.mkString(",")}]}"""
+  /** Spans, jobs and tasks as compact arrays for the result file. */
+  def data: Map[String, Seq[Seq[Any]]] = Listener.synchronized {
+    Map(
+      "spans" -> spans.map(s => Seq(s.id, s.parent, s.name, s.op, s.startMs, s.endMs)).toSeq,
+      "jobs" -> jobs.map(j => Seq(j.id, j.span, j.startMs, j.endMs, j.callSite, j.nStages)).toSeq,
+      "tasks" -> tasks.map(t => Seq(t.span, t.stage, t.launchMs, t.finishMs, t.runMs,
+        t.shuffleWrite, t.shuffleRead, t.spill, if (t.failed) 1 else 0)).toSeq)
   }
-}
-
-/** Minimal JSON rendering for the result file. */
-object Json {
-  def str(s: String): String = "\"" + s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
-
-  def num(d: Double): String =
-    if (d.isNaN || d.isInfinite) "null" else java.lang.Double.toString(d)
-
-  def value(v: Any): String = v match {
-    case null => "null"
-    case s: String => str(s)
-    case b: Boolean => b.toString
-    case i: Int => i.toString
-    case l: Long => l.toString
-    case d: Double => num(d)
-    case f: Float => num(f.toDouble)
-    case m: scala.collection.Map[_, _] =>
-      m.map { case (k, x) => str(k.toString) + ":" + value(x) }
-        .mkString("{", ",", "}")
-    case xs: Iterable[_] => xs.map(value).mkString("[", ",", "]")
-    case raw: RawJson => raw.text
-    case other => str(other.toString)
-  }
-
-  final case class RawJson(text: String)
 }

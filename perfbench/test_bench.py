@@ -66,6 +66,14 @@ class SelfTime(unittest.TestCase):
         self.assertEqual(lay["cycle"]["self_ms"], 40)
         self.assertAlmostEqual(M.coverage(trace), 0.6)
 
+    def test_coverage_leaves_out_heap_sample_spans(self):
+        trace = {"spans": [self.span(1, 0, 0, 100, "cycle"),
+                           self.span(2, 1, 0, 50, "cdc"),
+                           self.span(3, 1, 50, 60, "check"),
+                           self.span(4, 1, 60, 90, "upsert")],
+                 "jobs": [], "tasks": []}
+        self.assertAlmostEqual(M.coverage(trace), 80 / 90)
+
     def test_check_spans_are_left_out(self):
         trace = {"spans": [self.span(1, 0, 0, 10, "check"),
                            self.span(2, 1, 0, 5, "inner")],
@@ -99,14 +107,59 @@ class Generator(unittest.TestCase):
         for seed in (1, 2):
             with tempfile.TemporaryDirectory() as d:
                 rng = np.random.default_rng([seed, 0])
-                gen.gen_refresh(rng, d, 200, 3, 0.05)
+                gen.gen_refresh(rng, d, 200, 3, 0.05,
+                                gen.PARAMS["refresh-daily"]["delta_mix"])
                 with open(os.path.join(d, "refresh", "expected.json")) as f:
                     exp = json.load(f)
-                runs.append((exp, gen.gen_ops(rng, 1)))
+                runs.append((exp, gen.gen_ops(rng, gen.PARAMS["serve-mix"])))
         # sizes are fixed by the workload, content by the seed
         self.assertEqual([e["listing"] for e in runs[0][0]],
                          [e["listing"] for e in runs[1][0]])
         self.assertNotEqual(runs[0][1], runs[1][1])
+
+    def test_refresh_delta_has_one_document_of_each_class(self):
+        import json
+        with tempfile.TemporaryDirectory() as d:
+            gen.generate("refresh-daily", 3, d)
+            with open(os.path.join(d, "refresh", "expected.json")) as f:
+                exp = json.load(f)
+        p = gen.PARAMS["refresh-daily"]
+        self.assertEqual(len(exp), 1 + p["timed_cycles"])
+        for e in exp[1:]:
+            self.assertEqual([e[k] for k in ("new", "modified", "touched", "deleted")],
+                             [1, 1, 1, 1])
+            self.assertEqual(e["listing"], p["docs"])
+
+    def test_op_stream_follows_the_declared_mix(self):
+        import numpy as np
+        p = gen.PARAMS["serve-mix"]
+        rounds = gen.gen_ops(np.random.default_rng(7), p)
+        self.assertEqual(len(rounds), p["timed_rounds"] + 1)
+        for ops in rounds:
+            kinds = [o[0] for o in ops]
+            self.assertEqual(kinds.count("sql"), p["analytics_per_round"])
+            self.assertEqual(kinds.count("ann"), p["ann_per_round"])
+            self.assertEqual(kinds.count("bm25"), p["bm25_per_round"])
+            for i, o in enumerate(ops):
+                if o[0] == "write":
+                    self.assertEqual(i % p["write_every"], p["write_every"] - 1)
+                    self.assertEqual(o[2], p["write_batch"])
+                if o[0] == "bm25":
+                    self.assertEqual(len(set(o[1:])), p["bm25_terms"])
+
+
+class WorkloadParams(unittest.TestCase):
+    def test_every_value_has_a_source_and_a_reason(self):
+        import json
+        with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                               "workloads.json")) as f:
+            doc = json.load(f)
+        for group, entries in doc.items():
+            if group == "_doc":
+                continue
+            for name, e in entries.items():
+                self.assertEqual(set(e), {"value", "source", "why"}, f"{group}.{name}")
+                self.assertTrue(e["source"] and e["why"], f"{group}.{name}")
 
 
 class Conservation(unittest.TestCase):
@@ -176,6 +229,15 @@ class MetricNames(unittest.TestCase):
         want = {m["name"]: m["unit"] for m in self.declared()["end_to_end"]}
         self.assertEqual(got, want)
         self.assertEqual(run.end_to_end(res)["cycle_s"][0], 2.0)
+
+    def test_serve_round_counts_every_measured_op(self):
+        import run
+        s = {"cycle_s": [9.0],
+             "analytics_ms": [100.0, 200.0],
+             "ann_probe_ms": [50.0, 50.0, 900.0],  # the slow one follows a write
+             "bm25_probe_ms": [40.0],
+             "write_ms": [300.0]}
+        self.assertAlmostEqual(run.cycle_s(s), 1.64)
 
 
 if __name__ == "__main__":
