@@ -1,5 +1,7 @@
 package graft.ops
 
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
+
 import org.apache.spark.sql.DataFrame
 
 /** Lineage-truncation seam for every staged materialization in the
@@ -27,6 +29,28 @@ import org.apache.spark.sql.DataFrame
   * ReliableCheckpointSpec pins output equality between the two modes
   * (same hash either way — this seam changes fault-tolerance, never
   * results).
+  *
+  * Staged storage has three lifetimes, one per kind of frame:
+  *
+  * Truncated frames ([[stage]], [[stageObserved]]) are the only copy of
+  * their data: a read after their blocks are freed fails instead of
+  * recomputing. They are freed by [[release]] (a loop's dead
+  * predecessor) or at the query boundary by [[releaseTransients]], which
+  * SparkEntry calls before each registered query's construction —
+  * never by another call's sweep, on any thread. A driver that never
+  * reaches a query boundary (a batch loop such as perfbench's refresh
+  * cycle) holds its truncated frames until it calls
+  * [[releaseTransients]] itself.
+  *
+  * [[stageTransient]] frames keep their lineage, so freeing them early
+  * only costs a recompute. They are freed by the next [[stageTransient]]
+  * call on the same thread (a thread that has exited is drained by any
+  * later call), or at the boundary by [[releaseTransients]].
+  *
+  * Reliable-mode lazy caches (the persisted input of a lazy reliable
+  * [[stage]], read by its deferred checkpoint write) are freed by
+  * [[sweep]] once that write has landed; every reliable-mode staging
+  * call sweeps.
   */
 object Checkpoints {
 
@@ -34,23 +58,17 @@ object Checkpoints {
     * default) selects `localCheckpoint`. */
   val DirKey = "spark.graft.checkpoint.dir"
 
-  /** Reliable-mode LAZY stages persist their input so the deferred
+  /** Reliable-mode lazy stages persist their input so the deferred
     * checkpoint write reads the cache instead of recomputing — but the
     * cache must not outlive the write, or every pageRank /
     * connectedComponents / mmrTopK call leaks a MEMORY_AND_DISK frame
-    * for the session lifetime (unbounded growth in a long-running
-    * driver). Each lazy stage's (cache, checkpointed RDD) pair is
-    * queued here and swept on every subsequent `stage` call:
-    * `rdd.isCheckpointed` flips true exactly when the checkpoint files
-    * exist (the deferred write runs at the end of the first job that
-    * computes the RDD), at which point the files are the source of
-    * truth and the cache is dropped. Iterative operators call `stage`
-    * every round, so a converged loop carries at most the final lazy
-    * frame until the next operator invocation sweeps it; `sweep()` is
-    * public for callers that want a deterministic release point. */
+    * for the session lifetime. Each lazy stage's (cache, checkpointed
+    * RDD) pair is queued here until [[sweep]] sees
+    * `rdd.isCheckpointed`, which flips true exactly when the checkpoint
+    * files exist (the deferred write runs at the end of the first job
+    * that computes the RDD). */
   private val pendingUnpersist =
-    new java.util.concurrent.ConcurrentLinkedQueue[
-      (DataFrame, org.apache.spark.rdd.RDD[_])]()
+    new ConcurrentLinkedQueue[(DataFrame, org.apache.spark.rdd.RDD[_])]()
 
   /** Bound on pending lazy-stage caches: a plan-only consumer in
     * reliable mode constructs lazy stages that may NEVER materialize,
@@ -62,9 +80,9 @@ object Checkpoints {
 
   /** Release caches whose deferred reliable checkpoint has
     * materialized (plus the force-evicted overflow — see MaxPending).
-    * Safe to call at any time from any thread; never loses data (an
-    * evicted cache only costs a recompute if its write ever runs). */
-  def sweep(): Unit = {
+    * Never loses data: an evicted cache only costs a recompute if its
+    * write ever runs. */
+  private def sweep(): Unit = {
     val it = pendingUnpersist.iterator()
     while (it.hasNext) {
       val (cached, rdd) = it.next()
@@ -83,29 +101,15 @@ object Checkpoints {
     * deferred checkpoint (post-sweep count pins the no-leak claim). */
   private[graft] def pendingCount: Int = { sweep(); pendingUnpersist.size() }
 
-  /** Session conf key: set true to compile keepPartitioning stages
-    * under AQE after all. The loop joins then pay a re-exchange of the
-    * staged frames every round (checkpoint forgets partitioning under
-    * AQE) but regain AQE's runtime skew-splitting — the right trade
-    * for a graph with a GIANT component, where the CC pointer-halving
-    * join's key (the candidate label) concentrates onto the component
-    * minimum in late rounds and a static plan would funnel that
-    * component's rows through one task. Default false: near-dup
-    * components are typically small and exchange-free rounds win.
-    * Results are identical either way (spec-pinned). */
-  val LoopAqeKey = "spark.graft.loop.aqe"
-
   /** Free a staged frame's blocks NOW instead of waiting for
     * ContextCleaner's PERIODIC cycle (spark.cleaner.periodicGC.interval,
     * default 30 min): an iterative operator otherwise holds every prior
     * round's localCheckpoint blocks — rounds × |V| rows of dead storage
-    * across a long CC/PageRank run (the r11 scale ladder measured a
-    * 5.6× steady-time inflation at 200k from exactly this class of
-    * leftover). ONLY call when the frame can never be read again: for
-    * local checkpoints the cached blocks ARE the data (lineage is
-    * truncated at the checkpoint), so a later read would fail rather
-    * than recompute. The loop convention: release round i−1 right
-    * after round i's EAGER stage materializes; never release the
+    * across a long CC/PageRank run. ONLY call when the frame can never
+    * be read again: for local checkpoints the cached blocks ARE the data
+    * (lineage is truncated at the checkpoint), so a later read would
+    * fail rather than recompute. The loop convention: release round i−1
+    * right after round i's EAGER stage materializes; never release the
     * predecessor of a LAZY final stage (its deferred job still reads
     * it) or the frame an operator returns.
     *
@@ -129,75 +133,46 @@ object Checkpoints {
     staged.head.unpersist(blocking = false)
   }
 
-  /** Transient staged frames (see [[stageTransient]]) awaiting release,
-    * queued PER OWNING THREAD (r13 ADVICE: a JVM-global queue let one
-    * pipeline's stageTransient sweep evict another thread's — or
-    * session's — still-pending frame; correctness-safe via lineage but
-    * a silent recompute of the corpus-scale scan the staging exists to
-    * avoid). Each thread's stageTransient sweeps only its OWN prior
-    * frames; queues whose owner thread has exited are reaped on any
-    * later stageTransient call, and [[releaseTransients]] stays the
-    * explicit global loop-boundary sweep. Releasing early only costs a
-    * recompute (lineage is preserved), so sweeping stays aggressive. */
+  /** [[stageTransient]] frames awaiting release, queued PER OWNING
+    * THREAD: a thread's call sweeps only its own prior frames, so a
+    * concurrent pipeline's still-pending frame is never evicted (a
+    * silent recompute of the corpus-scale scan the staging exists to
+    * avoid). */
   private val transientQueues =
-    new java.util.concurrent.ConcurrentHashMap[Thread,
-      java.util.concurrent.ConcurrentLinkedQueue[DataFrame]]()
+    new ConcurrentHashMap[Thread, ConcurrentLinkedQueue[DataFrame]]()
 
-  private def drain(
-      q: java.util.concurrent.ConcurrentLinkedQueue[DataFrame]): Unit = {
+  private def drain(q: ConcurrentLinkedQueue[DataFrame]): Unit = {
     var f = q.poll()
-    while (f != null) {
-      // two transient flavors share the queues: [[stageTransient]]
-      // frames are persist-based (Dataset.unpersist frees the cache;
-      // lineage preserved), while [[registerTransient]] frames are
-      // staged through stageImpl — a bare LogicalRDD whose blocks only
-      // free via the RDD (Dataset.unpersist is a no-op there). Match on
-      // the exact output shape; a bare LogicalRDD can only be the
-      // staged frame itself, never a shared upstream input.
-      f.queryExecution.analyzed match {
-        case l: org.apache.spark.sql.execution.LogicalRDD =>
-          l.rdd.unpersist(blocking = false)
-        case _ => f.unpersist(blocking = false)
-      }
-      f = q.poll()
-    }
-  }
-
-  private def reapDeadThreadQueues(): Unit = {
-    val it = transientQueues.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (!e.getKey.isAlive) { drain(e.getValue); it.remove() }
-    }
+    while (f != null) { f.unpersist(blocking = false); f = q.poll() }
   }
 
   /** Stage a compute-once/consume-within-ONE-plan frame (TF-IDF's tf
     * partials, unigramNll's vocab) with DETERMINISTIC release instead of
-    * the wait-for-the-periodic-cleaner convention (r12 VERDICT #5: each
-    * single-shot call leaked one MEMORY_AND_DISK frame for up to 30 min;
-    * the r11 ladder measured 5.6× steady inflation when loops leak this
-    * class of block).
+    * the wait-for-the-periodic-cleaner convention, under which each
+    * single-shot call held one MEMORY_AND_DISK frame for up to 30 min.
     *
     * Unlike [[stage]], lineage is NOT truncated: the frame is persisted
     * and eagerly materialized (one job computes it once; every scan in
     * the consuming plan reads the cache), so releasing its blocks is
     * safe at ANY time — a later action simply recomputes from lineage
     * instead of failing on vanished checkpoint blocks. That safety is
-    * what lets each `stageTransient` call sweep the CALLING THREAD's
-    * prior transient frames (their consumers have run by then in every
-    * registered-query flow; a plan still unmaterialized when its input
-    * is swept degrades to recompute, never to wrong results — and since
-    * r13's ADVICE, a concurrent pipeline on another thread is never the
-    * victim), and lets batch drivers call [[releaseTransients]] at a
-    * loop boundary for an exact zero.
-    * Iterative operators must keep using [[stage]]: their loop rounds
-    * need lineage truncation, and their predecessors are provably dead
-    * — the stronger [[release]] applies there. */
+    * what lets each call sweep the calling thread's prior transient
+    * frames, and the queues of threads that have exited: their
+    * consumers have run by then in every registered-query flow, and a
+    * plan still unmaterialized when its input is swept degrades to a
+    * recompute, never to wrong results. Iterative operators must keep
+    * using [[stage]]: their loop rounds need lineage truncation, and
+    * their predecessors are provably dead — the stronger [[release]]
+    * applies there. */
   def stageTransient(df: DataFrame): DataFrame = {
     val own = transientQueues.computeIfAbsent(Thread.currentThread(),
-      _ => new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]())
+      _ => new ConcurrentLinkedQueue[DataFrame]())
     drain(own)
-    reapDeadThreadQueues()
+    val it = transientQueues.entrySet().iterator()
+    while (it.hasNext) {
+      val e = it.next()
+      if (!e.getKey.isAlive) { drain(e.getValue); it.remove() }
+    }
     val cached = df.persist(
       org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     cached.count() // materialize NOW: one computation feeds all consumers
@@ -205,111 +180,32 @@ object Checkpoints {
     cached
   }
 
-  /** Register a compute-once/consume-within-ONE-plan frame for shared,
-    * DETERMINISTICALLY-released staging WITHOUT sweeping the thread's
-    * prior transients and WITHOUT a materialization barrier (r14). The
-    * frame stages through the same seam as [[stage]] (lazy
-    * localCheckpoint by default, reliable checkpoint under [[DirKey]]) —
-    * row-block storage, which measured ~1.8× faster end-to-end than the
-    * columnar persist cache for the array-heavy frames this serves —
-    * and is queued on the owning thread for the next
-    * [[releaseTransients]] sweep. Unlike [[stageTransient]] it CHAINS
-    * inside one not-yet-materialized plan (a sweep at call time would
-    * evict the earlier link before its consumer ran), and unlike a bare
-    * lazy localCheckpoint its blocks free at the next QUERY boundary
-    * instead of waiting on driver GC + ContextCleaner — the r14
-    * mid-round bench measured late-suite queries 2-3× inflated from
-    * exactly that accumulation (SparkEntry sweeps before each
-    * registered query's construction).
-    *
-    * Contract (the [[release]] rule, not the [[stageTransient]] one):
-    * local-mode lineage is TRUNCATED, so reading the frame after its
-    * sweep fails loudly — only register frames whose every consumer
-    * runs before the next query boundary, which is true by construction
-    * for query-internal shared subtrees. */
-  def registerTransient(df: DataFrame): DataFrame = {
-    val own = transientQueues.computeIfAbsent(Thread.currentThread(),
-      _ => new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]())
-    reapDeadThreadQueues()
-    val staged = stageImpl(df, eager = false)
-    own.add(staged)
-    staged
-  }
+  /** Every [[stage]]/[[stageObserved]] frame awaiting the query-boundary
+    * sweep, from every thread: the frames that survive an operator (a
+    * staged edge list, a loop's lazy final, a query-internal shared
+    * subtree) would otherwise wait on driver GC + the ContextCleaner's
+    * periodic sweep, and a suite's leftovers squeeze the storage pool
+    * (late-suite queries measured up to 3× slower than in isolation).
+    * Only [[releaseTransients]] drains it. Double release with
+    * [[release]] is a no-op (RDD.unpersist is idempotent). */
+  private val stagedFrames = new ConcurrentLinkedQueue[DataFrame]()
 
-  /** Release every outstanding transient AND staged frame now, across
-    * ALL threads (idempotent; safe at any time for transients — see
-    * [[stageTransient]]; staged frames are released on the
-    * query-boundary contract below). Batch drivers running many
-    * TF-IDF/NLL calls per session call this at their loop boundary. */
+  /** Query boundary: release every outstanding transient AND staged
+    * frame now, across ALL threads (idempotent). SparkEntry calls this
+    * before each registered query's construction; batch drivers call it
+    * at their loop boundary. Contract: every consumer of a staged frame
+    * runs before the next boundary — true by construction for the
+    * registered queries, which compute from the parquet inputs and share
+    * nothing staged across queries. */
   def releaseTransients(): Unit = {
-    val it = transientQueues.entrySet().iterator()
-    while (it.hasNext) { drain(it.next().getValue); it.remove() }
-    val it2 = stagedQueues.entrySet().iterator()
-    while (it2.hasNext) { drain(it2.next().getValue); it2.remove() }
-  }
-
-  /** Every [[stage]]/[[stageObserved]] frame awaiting the QUERY-BOUNDARY
-    * sweep (r14): loop predecessors are released round by round via
-    * [[release]], but the frames that survive an operator — the staged
-    * symmetric edge list, the lazy loop finals, the compute-once
-    * assignment frames — used to wait on driver GC + the
-    * ContextCleaner's periodic sweep, and the r14 mid-suite bench
-    * measured late-suite queries up to 3× inflated from ~150 queries'
-    * leftovers squeezing the storage pool (q_corpus_bigram_nll 2.94 s
-    * in-suite vs 0.98 s isolated). Staged frames queue per owning
-    * thread here and [[releaseTransients]] — which SparkEntry calls
-    * before each registered query's construction — frees the blocks
-    * deterministically. Contract: a staged frame's every consumer runs
-    * before the next query boundary (true by construction — every
-    * registered query computes from the parquet inputs; nothing staged
-    * is shared across queries). Double-release with [[release]] is a
-    * no-op (RDD.unpersist is idempotent). */
-  private val stagedQueues =
-    new java.util.concurrent.ConcurrentHashMap[Thread,
-      java.util.concurrent.ConcurrentLinkedQueue[DataFrame]]()
-
-  private def enqueueStaged(df: DataFrame): Unit = {
-    // a dead thread's still-queued frames may have live consumers (a
-    // Par worker's loop final, returned to the caller) — MIGRATE them
-    // to the current thread's queue rather than draining (the
-    // transient-queue reap may drain because transients recompute from
-    // lineage; staged frames cannot)
-    val own = stagedQueues.computeIfAbsent(Thread.currentThread(),
-      _ => new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]())
-    val it = stagedQueues.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (!e.getKey.isAlive) {
-        var f = e.getValue.poll()
-        while (f != null) { own.add(f); f = e.getValue.poll() }
-        it.remove()
-      }
-    }
-    own.add(df)
-  }
-
-  /** Move `threads`' queued staged frames onto the CALLING thread's
-    * queue — [[Par]] calls this after joining its workers so a loop
-    * final staged on a worker thread lives until the caller's query
-    * boundary, never until a dead-thread reap. */
-  private[ops] def adoptStagedFrom(threads: Seq[Thread]): Unit = {
-    val own = stagedQueues.computeIfAbsent(Thread.currentThread(),
-      _ => new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]())
-    threads.foreach { t =>
-      val q = stagedQueues.remove(t)
-      if (q != null) {
-        var f = q.poll()
-        while (f != null) { own.add(f); f = q.poll() }
-      }
-    }
+    val it = transientQueues.values().iterator()
+    while (it.hasNext) { drain(it.next()); it.remove() }
+    var f = stagedFrames.poll()
+    while (f != null) { release(f); f = stagedFrames.poll() }
   }
 
   /** Spec surface: outstanding staged frames across all threads. */
-  private[graft] def stagedCount: Int = {
-    var n = 0
-    stagedQueues.values().forEach(q => n += q.size())
-    n
-  }
+  private[graft] def stagedCount: Int = stagedFrames.size()
 
   /** Spec surface: outstanding transient frames across all threads. */
   private[graft] def transientCount: Int = {
@@ -376,7 +272,7 @@ object Checkpoints {
     * loop-round frames whose subtree is already shape-pinned (stat-less
     * staged scans joined + one aggregate — the static planner keeps
     * them sort-merge) — AQE's runtime re-planning has nothing to add
-    * there (set [[LoopAqeKey]] when it does — giant-component skew).
+    * there.
     * The AQE-off + partition pins live on a cached CLONED session
     * (own SQLConf, shared context/cache), so they are never visible to
     * any other thread of the parent — the compile happens at the
@@ -385,7 +281,7 @@ object Checkpoints {
       keepPartitioning: Boolean = false,
       shufflePartitions: Option[Int] = None): DataFrame = {
     val out = stageExec(df, eager, keepPartitioning, shufflePartitions)._1
-    enqueueStaged(out)
+    stagedFrames.add(out)
     out
   }
 
@@ -396,8 +292,8 @@ object Checkpoints {
     * .observedMetrics), NOT via an Observation listener. An Observation
     * registers on one session's listener bus, and the loop compile
     * runs in the cached cloned session whose bus predates the
-    * registration — `Observation.get` would block forever (this hung
-    * the r11 spec battery). The accumulator read is session-independent
+    * registration — `Observation.get` would block forever. The
+    * accumulator read is session-independent
     * and exactly-once for the single materialization job. */
   def stageObserved(df: DataFrame,
       keepPartitioning: Boolean = false,
@@ -405,7 +301,7 @@ object Checkpoints {
       : (DataFrame, Map[String, org.apache.spark.sql.Row]) = {
     val (out, executed) =
       stageExec(df, eager = true, keepPartitioning, shufflePartitions)
-    enqueueStaged(out)
+    stagedFrames.add(out)
     (out, executed.queryExecution.observedMetrics)
   }
 
@@ -416,17 +312,12 @@ object Checkpoints {
       keepPartitioning: Boolean,
       shufflePartitions: Option[Int]): (DataFrame, DataFrame) = {
     val session = df.sparkSession
-    val aqeRounds =
-      session.conf.getOption(LoopAqeKey).exists(_.toBoolean)
-    if (keepPartitioning && !aqeRounds) {
+    if (keepPartitioning) {
       // compile THIS staging in a CLONED session: shared SparkContext,
       // block-manager cache, and listener bus, but its OWN SQLConf —
       // so the AQE-off pin and the loop's spark.sql.shuffle.partitions
       // value are invisible to every other thread of the parent
-      // session. (Until r11 this seam flipped the parent conf inside a
-      // lock and documented the cross-thread visibility window as a
-      // caveat; the clone removes the caveat instead of describing it.
-      // No lock needed — nothing shared is mutated.) The staged result
+      // session. The staged result
       // is a LogicalRDD (a materialized RDD + schema + partitioning),
       // context-level state, so re-binding it to the parent session is
       // sound and downstream plans see the preserved layout.

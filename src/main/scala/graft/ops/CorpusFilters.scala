@@ -140,11 +140,11 @@ object CorpusFilters {
       n: Int): DataFrame = {
     // staged LAZY: the per-(doc, gram) pre-agg feeds the corpus count
     // AND the join back — unstaged, the n-gram explode executed twice
-    val perDoc = Checkpoints.registerTransient(df
+    val perDoc = Checkpoints.stage(df
       .select(col(docId), split(col(textCol), "\\s+").as("_w"))
       .select(col(docId), explode(wordNgramsOf(col("_w"), n)).as("gram"))
       .groupBy(col(docId), col("gram"))
-      .agg(count(lit(1)).as("k")))
+      .agg(count(lit(1)).as("k")), eager = false)
     val corpus = perDoc.groupBy(col("gram"))
       .agg(sum(col("k")).as("c"))
     perDoc.join(corpus, "gram")

@@ -226,11 +226,11 @@ object Dedup {
     // the corpus-scale shingle explode executes 6x per run (sets 3
     // consumers x sh 2 consumers). Lazy: the first real action
     // materializes the blocks, every later scan re-reads them.
-    val sh = Checkpoints.registerTransient(
-      shingleFrame(docs, idCol, textCol))
+    val sh = Checkpoints.stage(
+      shingleFrame(docs, idCol, textCol), eager = false)
     // global document frequency — the canonical rarest-first order key
     val dfreq = sh.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
-    val sets = Checkpoints.registerTransient(setsFrom(sh, dfreq))
+    val sets = Checkpoints.stage(setsFrom(sh, dfreq), eager = false)
     val pref = prefixOf(sets, threshold)
     // candidate pairs: prefixes share a shingle + the length filter
     // (J ≥ t forces min(|a|,|b|) ≥ ⌈t·max(|a|,|b|)⌉). The join key is
@@ -327,12 +327,12 @@ object Dedup {
     // staged LAZY like the batch path: corpSh feeds dfreq + corpus set
     // assembly; each side's sets feed its prefix explode AND its verify
     // join — unstaged, the corpus shingle explode ran 4x per call
-    val corpSh = Checkpoints.registerTransient(
-      shingleFrame(corpus, idCol, textCol))
+    val corpSh = Checkpoints.stage(
+      shingleFrame(corpus, idCol, textCol), eager = false)
     val incSh = shingleFrame(incoming, idCol, textCol)
     val dfreq = corpSh.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
-    val corpSets = Checkpoints.registerTransient(setsFrom(corpSh, dfreq))
-    val incSets = Checkpoints.registerTransient(setsFrom(incSh, dfreq))
+    val corpSets = Checkpoints.stage(setsFrom(corpSh, dfreq), eager = false)
+    val incSets = Checkpoints.stage(setsFrom(incSh, dfreq), eager = false)
     val cand = prefixOf(incSets, threshold).as("a")
       .join(prefixOf(corpSets, threshold).hint("shuffle_hash").as("b"),
         col("a.shingle") === col("b.shingle") &&
@@ -381,17 +381,7 @@ object Dedup {
     * `maxRounds` is a loud guard, not a silent cap: exceeding it throws
     * IllegalStateException rather than returning half-merged components.
     * With shortcutting, 64 rounds covers diameters ≈ 2^63 — hitting the
-    * guard means the input, not the bound, is wrong.
-    *
-    * Skew note: the pointer-halving self-join keys on the CANDIDATE
-    * LABEL, which concentrates onto each component's minimum as rounds
-    * converge — for a graph dominated by one giant component the
-    * default exchange-free AQE-off round compile would funnel that
-    * component through one task in late rounds. Such deployments set
-    * `Checkpoints.LoopAqeKey` (spark.graft.loop.aqe=true) to compile
-    * rounds under AQE instead: each round then re-exchanges the staged
-    * frames but regains runtime skew-splitting. Results are identical
-    * either way (ReliableCheckpointSpec pins it). */
+    * guard means the input, not the bound, is wrong. */
   def connectedComponents(vertices: DataFrame, idCol: String,
       edges: DataFrame, srcCol: String, dstCol: String,
       maxRounds: Int = 64): DataFrame =

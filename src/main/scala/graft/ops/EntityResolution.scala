@@ -91,8 +91,8 @@ object EntityResolution {
       strCol: String): DataFrame = {
     // staged LAZY: the signature fan-out ((len+1)·N rows of md5) feeds
     // BOTH self-join legs — unstaged it executed twice per run
-    val sigs = Checkpoints.registerTransient(
-      signatureFrame(mentions, idCol, strCol))
+    val sigs = Checkpoints.stage(
+      signatureFrame(mentions, idCol, strCol), eager = false)
     val left = sigs.select(col("_h"),
       col("_id").as("id_a"), col("_name").as("name_a"))
     val right = sigs.select(col("_h"),
@@ -125,16 +125,16 @@ object EntityResolution {
     // CC vertex set, and the name rejoin — unstaged, the distinct-name
     // aggregate over the mention table executed 4× per run; withEnt
     // likewise feeds the size aggregate AND the final join
-    val reps = Checkpoints.registerTransient(mentions.groupBy(col(strCol))
-      .agg(min(col(idCol)).as("_rep")))
+    val reps = Checkpoints.stage(mentions.groupBy(col(strCol))
+      .agg(min(col(idCol)).as("_rep")), eager = false)
     val pairs = edOnePairs(
       reps.select(col("_rep"), col(strCol)), "_rep", strCol)
     val labels = Dedup.connectedComponents(
       reps.select(col("_rep")), "_rep", pairs, "id_a", "id_b")
     val named = reps.join(labels, "_rep")
       .select(col(strCol), col("cluster_id").as("entity_id"))
-    val withEnt = Checkpoints.registerTransient(
-      mentions.select(col(idCol), col(strCol)).join(named, strCol))
+    val withEnt = Checkpoints.stage(
+      mentions.select(col(idCol), col(strCol)).join(named, strCol), eager = false)
     val sizes = withEnt.groupBy(col("entity_id"))
       .agg(count(lit(1)).as("entity_size"))
     withEnt.join(sizes, "entity_id")
@@ -251,8 +251,8 @@ object EntityResolution {
       k: Int): DataFrame = {
     require(k >= 1, s"passJoinPairs: k must be >= 1, got $k")
     // staged LAZY: m feeds both the segment and probe fan-outs
-    val m = Checkpoints.registerTransient(
-      mentions.where(length(col(strCol)) >= k + 1))
+    val m = Checkpoints.stage(
+      mentions.where(length(col(strCol)) >= k + 1), eager = false)
     val segs = segFrame(m, idCol, strCol, k)
     val probes = probeFrame(m, idCol, strCol, k)
     // SHUFFLE_HASH, not broadcast: both sides are generator fan-outs of

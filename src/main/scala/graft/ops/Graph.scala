@@ -210,7 +210,7 @@ object Graph {
       () => pageRankSym(vertices, idCol, sym, iters, damping, nV, loopP))
     // staged: members feeds the per-cluster argmax AND the final
     // join-back — unstaged, the cc⋈pr join executed twice per run
-    val members = Checkpoints.registerTransient(cc.join(pr, idCol))
+    val members = Checkpoints.stage(cc.join(pr, idCol), eager = false)
     val best = members.groupBy(col("cluster_id"))
       .agg(min(struct((-col("pagerank")).as("np"), col(idCol).as("i")))
         .as("_best"))
@@ -254,9 +254,9 @@ object Graph {
     // staged: the degree table joins back on BOTH endpoints — unstaged,
     // the |V|-scale aggregate (and everything upstream of e0) executed
     // once per join leg
-    val deg = Checkpoints.registerTransient(
+    val deg = Checkpoints.stage(
       e0.select(explode(array(col("a"), col("b"))).as("v"))
-        .groupBy(col("v")).agg(count(lit(1)).as("deg")))
+        .groupBy(col("v")).agg(count(lit(1)).as("deg")), eager = false)
     e0
       .join(deg.select(col("v").as("a"), col("deg").as("da")), "a")
       .join(deg.select(col("v").as("b"), col("deg").as("db")), "b")
@@ -364,9 +364,9 @@ object Graph {
     // (~15× in the registered q_sim_triangles plan: 84 staged-scan
     // references, 98 exchanges). Staged once each, the plan carries
     // one generation pass + one orientation pass.
-    val e0 = Checkpoints.registerTransient(
-      canonicalEdges(edges, srcCol, dstCol))
-    val oriented = Checkpoints.registerTransient(orientByDegree(e0))
+    val e0 = Checkpoints.stage(
+      canonicalEdges(edges, srcCol, dstCol), eager = false)
+    val oriented = Checkpoints.stage(orientByDegree(e0), eager = false)
     // wedges: unordered out-neighbor pairs, canonicalized by id so the
     // closing lookup is a single equi-join against e0's (a < b) form
     val o1 = oriented.select(col("s"), col("d").as("d1"))

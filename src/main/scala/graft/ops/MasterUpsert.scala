@@ -79,8 +79,8 @@ object MasterUpsert {
     * delete-side aggregate pairs planned 4×). */
   def upsert(master: DataFrame, deletes: DataFrame, fresh: DataFrame,
       orderCols: Seq[String]): DataFrame = {
-    val remaining = Checkpoints.registerTransient(
-      applyDeletes(master, deletes))
+    val remaining = Checkpoints.stage(
+      applyDeletes(master, deletes), eager = false)
     val inserted = assignIds(remaining, fresh, orderCols)
     remaining.unionByName(inserted.select(remaining.columns.toIndexedSeq.map(col): _*))
   }

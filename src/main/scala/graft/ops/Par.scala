@@ -30,10 +30,6 @@ object Par {
         t
       }
       threads.foreach(_.join())
-      // frames a worker staged may outlive it (a loop's returned final):
-      // re-home them onto the caller's queue so the query-boundary
-      // sweep — not a dead-thread reap — decides their release
-      Checkpoints.adoptStagedFrom(threads)
       results.collectFirst { case Left(e) => e }.foreach(e => throw e)
       results.toSeq.map(_.toOption.get)
     }

@@ -84,8 +84,8 @@ object CdcQueries extends QueryModule {
     // An earlier round measured EAGER caching slower at this scale; the
     // lazy localCheckpoint has no standalone barrier and the first
     // consumer's job materializes it once for all four.
-    val cls = graft.ops.Checkpoints.registerTransient(
-      classified(spark, dir))
+    val cls = graft.ops.Checkpoints.stage(
+      classified(spark, dir), eager = false)
     val master = masterCatalog(spark, dir)
     val deletes = Cdc.toDelete(cls)
       .withColumn("id", when(col("id") % 20 === 3, lit(null)).otherwise(col("id")))

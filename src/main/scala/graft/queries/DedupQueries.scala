@@ -67,12 +67,13 @@ object DedupQueries extends QueryModule {
     // staged LAZY (the prefixJaccard convention): sh0 feeds the hot-set
     // aggregate AND the anti-join; the capped sh feeds sizes plus both
     // self-join legs — unstaged, the shingle explode ran 5x per run
-    val sh0 = graft.ops.Checkpoints.registerTransient(docs
-      .select(col("doc_id"), explode(Dedup.shingles(col("text"))).as("shingle")))
+    val sh0 = graft.ops.Checkpoints.stage(docs
+      .select(col("doc_id"), explode(Dedup.shingles(col("text"))).as("shingle")),
+      eager = false)
     val hot = sh0.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
       .filter(col("df") > maxDf).select(col("shingle"))
-    val sh = graft.ops.Checkpoints.registerTransient(
-      sh0.join(broadcast(hot), Seq("shingle"), "left_anti"))
+    val sh = graft.ops.Checkpoints.stage(
+      sh0.join(broadcast(hot), Seq("shingle"), "left_anti"), eager = false)
     val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n_sh"))
     val inter = sh.as("a")
       .join(sh.as("b"),

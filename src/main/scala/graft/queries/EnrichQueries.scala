@@ -176,8 +176,8 @@ object EnrichQueries extends QueryModule {
     // staged LAZY (the cosinePairsCore convention): the page split feeds
     // BOTH the chapter-summary fold and the section derivation —
     // unstaged, the corpus-scale text flatMap executed twice per run
-    val pgs = graft.ops.Checkpoints.registerTransient(
-        pagesOf(documents).toDF())
+    val pgs = graft.ops.Checkpoints.stage(
+        pagesOf(documents).toDF(), eager = false)
       .as[graft.model.PageRecord](
         org.apache.spark.sql.Encoders.product[graft.model.PageRecord])
     val enrichedPgs = EnrichStages.enrichPages(pgs, enricher(spark))
@@ -208,8 +208,8 @@ object EnrichQueries extends QueryModule {
     import graft.ops.DbExport
     // staged LAZY: the full enrich→sections→chunks chain feeds both the
     // embedding pass and the final join — unstaged it executed twice
-    val chunks = graft.ops.Checkpoints.registerTransient(
-        pipelineChunksOver(documents).toDF())
+    val chunks = graft.ops.Checkpoints.stage(
+        pipelineChunksOver(documents).toDF(), eager = false)
       .as[graft.model.ChunkRecord](
         org.apache.spark.sql.Encoders.product[graft.model.ChunkRecord])
     val embedded = EnrichStages.embedChunks(chunks,
@@ -246,8 +246,8 @@ object EnrichQueries extends QueryModule {
     import org.apache.spark.sql.expressions.Window
     // staged LAZY: the chunk chain feeds the embedding scorer AND the
     // citation-column join-back (the fullExportOver convention)
-    val chunks = graft.ops.Checkpoints.registerTransient(
-        pipelineChunks(spark, dir).toDF())
+    val chunks = graft.ops.Checkpoints.stage(
+        pipelineChunks(spark, dir).toDF(), eager = false)
       .as[graft.model.ChunkRecord](
         org.apache.spark.sql.Encoders.product[graft.model.ChunkRecord])
     val embedded = EnrichStages.embedChunks(chunks, enricher(spark)).toDF()

@@ -100,8 +100,8 @@ object PipelineQueries extends QueryModule {
     // staged LAZY: the section derivation feeds the chunk explode AND
     // the reassembly join — unstaged, the page split + section fold
     // (the expensive text algebra) executed twice per run
-    val secs = graft.ops.Checkpoints.registerTransient(
-        DocPipeline.pagesToSections(pages(spark, dir)).toDF())
+    val secs = graft.ops.Checkpoints.stage(
+        DocPipeline.pagesToSections(pages(spark, dir)).toDF(), eager = false)
       .as[graft.model.SectionRecord](
         org.apache.spark.sql.Encoders.product[graft.model.SectionRecord])
     val chs = DocPipeline.sectionsToChunks(secs)

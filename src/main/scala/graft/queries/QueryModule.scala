@@ -31,7 +31,7 @@ trait QueryModule {
     * a corpus-scale frame would trade a scan for corpus-scale storage. */
   protected def orderedSmall(df: DataFrame,
       cols: org.apache.spark.sql.Column*): DataFrame =
-    graft.ops.Checkpoints.registerTransient(df).orderBy(cols: _*)
+    graft.ops.Checkpoints.stage(df, eager = false).orderBy(cols: _*)
 }
 
 object QueryModule {

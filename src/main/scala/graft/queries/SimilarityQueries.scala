@@ -186,8 +186,8 @@ object SimilarityQueries extends QueryModule {
     // unstaged the adaptive candidate join + exact verification — the
     // expensive half of pair generation downstream of cosinePairsCore's
     // internal checkpoints — executed twice per run
-    val pairs = graft.ops.Checkpoints.registerTransient(
-      adaptivePairs(emb))
+    val pairs = graft.ops.Checkpoints.stage(
+      adaptivePairs(emb), eager = false)
     val isNew = (c: org.apache.spark.sql.Column) => c % 10 === 7
     val corpusPairs = pairs.filter(
       !isNew(col("vec_a")) && !isNew(col("vec_b")))

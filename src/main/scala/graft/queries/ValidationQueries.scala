@@ -68,13 +68,13 @@ object ValidationQueries extends QueryModule {
     // a plain pushdown-pruned parquet read, deliberately left
     // unstaged — staging a corpus-scale frame would trade a scan for
     // corpus-scale storage (the orderedSmall rule).
-    val fresh = graft.ops.Checkpoints.registerTransient(
+    val fresh = graft.ops.Checkpoints.stage(
       Tables.lineitem(spark, dir)
         .filter(col("l_orderkey") % 50 === 0)
         .groupBy(col("l_orderkey").as("document_id"))
         .agg(lit(0).as("row_no"),
           sum(col("l_quantity").cast("decimal(18,2)")).cast("double")
-            .as("value")))
+            .as("value")), eager = false)
     DbExport.replaceByKey(master, fresh, "document_id")
       .orderBy(col("document_id"), col("row_no"), col("value"))
   }

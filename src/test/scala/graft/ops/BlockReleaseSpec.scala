@@ -135,21 +135,20 @@ class BlockReleaseSpec extends SparkSpecBase {
     assert(Checkpoints.transientCount === 0)
   }
 
-  test("registerTransient chains lazily and sweeps only at the boundary") {
-    // r14: the lazy, non-sweeping registration behind orderedSmall and
-    // the query-internal shared-subtree stagings. Three properties: (a)
-    // registering a SECOND frame must NOT evict the first (they chain
-    // inside one not-yet-materialized plan — the hazard stageTransient's
-    // drain-at-call would create); (b) materialization persists staged
-    // blocks; (c) releaseTransients (the SparkEntry per-query boundary
-    // sweep) frees the BLOCKS, not just the queue — Dataset.unpersist is
-    // a no-op for checkpointed frames, so the drain must go through the
-    // LogicalRDD.
+  test("lazy stage() frames chain and are freed only at the boundary") {
+    // the lazy staging behind orderedSmall and the query-internal
+    // shared subtrees. Three properties: (a) staging a SECOND frame must
+    // NOT free the first (they chain inside one not-yet-materialized
+    // plan); (b) materialization persists staged blocks, held through
+    // the consumer's job; (c) releaseTransients (the SparkEntry
+    // per-query boundary sweep) frees the BLOCKS, not just the queue —
+    // Dataset.unpersist is a no-op for checkpointed frames, so the
+    // drain must go through the LogicalRDD.
     Checkpoints.releaseTransients()
-    val a = Checkpoints.registerTransient(Seq((1L, "x")).toDF("id", "s"))
-    val b = Checkpoints.registerTransient(a.select(col("id")))
-    assert(Checkpoints.transientCount === 2,
-      "registerTransient must not sweep the thread's prior transients")
+    val a = Checkpoints.stage(Seq((1L, "x")).toDF("id", "s"), eager = false)
+    val b = Checkpoints.stage(a.select(col("id")), eager = false)
+    assert(Checkpoints.stagedCount === 2,
+      "a lazy stage() must not sweep the thread's prior staged frames")
     val joined = a.join(b, "id")
     assert(joined.count() === 1) // materializes both staged frames
     def stagedRdds(dfs: org.apache.spark.sql.DataFrame*) = dfs.flatMap {
@@ -162,10 +161,30 @@ class BlockReleaseSpec extends SparkSpecBase {
       org.apache.spark.storage.StorageLevel.NONE),
       "both chained frames hold staged blocks through their consumer's job")
     Checkpoints.releaseTransients()
-    assert(Checkpoints.transientCount === 0)
+    assert(Checkpoints.stagedCount === 0)
     assert(rdds.forall(_.getStorageLevel ==
       org.apache.spark.storage.StorageLevel.NONE),
       "the boundary sweep must free the staged blocks themselves")
+  }
+
+  test("an upsert result stays readable after a later stageTransient on the same thread") {
+    // the refresh composition: MasterUpsert stages its survivors with
+    // truncated lineage, and a KeywordSearch call on the same thread
+    // stages (and sweeps) its own transients before the upsert result is
+    // read — the sweep must not reach the upsert's staged frame
+    Checkpoints.releaseTransients()
+    val key = Seq("document_source", "document_type", "document_name")
+    val master = Seq((1L, "s", "t", "a"), (2L, "s", "t", "b"))
+      .toDF("id" +: key: _*)
+    val deletes = Seq[(Option[Long], String, String, String)](
+      (Some(2L), "s", "t", "b")).toDF("id" +: key: _*)
+    val fresh = Seq(("s", "t", "c"), ("s", "t", "d")).toDF(key: _*)
+    val out = MasterUpsert.upsert(master, deletes, fresh, Seq("document_name"))
+    KeywordSearch.tfidfTopK(
+      Seq((1L, "a b c"), (2L, "b c d")).toDF("doc_id", "text"), "doc_id",
+      "text", k = 1)
+    assert(out.count() === 3)
+    Checkpoints.releaseTransients()
   }
 
   test("a swept transient frame recomputes instead of failing") {
@@ -221,13 +240,12 @@ class BlockReleaseSpec extends SparkSpecBase {
   test("a Par worker's staged frame survives its thread and reads until the boundary") {
     // loop finals are staged on Par worker threads (clusterRepresentatives
     // runs CC and PageRank on two driver threads) and consumed by the
-    // caller's action AFTER the workers die — Par re-homes the workers'
-    // queues onto the caller so only the boundary sweep releases them
+    // caller's action AFTER the workers die — only the boundary sweep
+    // releases them
     Checkpoints.releaseTransients()
     val Seq(staged) = Par.run[org.apache.spark.sql.DataFrame](
       () => Checkpoints.stage((1 to 60).toDF("v"), eager = true))
-    // another stage on the MAIN thread (would trigger any dead-thread
-    // handling) must not free the worker's frame
+    // another stage on the MAIN thread must not free the worker's frame
     Checkpoints.stage((1 to 5).toDF("w"), eager = true)
     assert(staged.count() === 60,
       "a dead worker's staged frame must stay readable until the boundary")

@@ -118,20 +118,6 @@ class ReliableCheckpointSpec extends SparkSpecBase {
     } finally spark.conf.unset(Checkpoints.DirKey)
   }
 
-  test("loop-AQE escape hatch: clusterRepresentatives output unchanged") {
-    // spark.graft.loop.aqe=true trades the exchange-free AQE-off round
-    // compiles back for AQE's runtime skew handling (giant-component
-    // deployments); the seam must never change results
-    val (vertices, pairs) = graphFixture
-    def run() = Graph
-      .clusterRepresentatives(vertices, "id", pairs, "id_a", "id_b")
-      .orderBy(col("id")).collect().map(_.toSeq).toSeq
-    val default = run()
-    spark.conf.set(Checkpoints.LoopAqeKey, "true")
-    try assert(run() === default)
-    finally spark.conf.unset(Checkpoints.LoopAqeKey)
-  }
-
   test("mmrTopK: reliable-checkpoint output equals local") {
     // covers the r8 seam migration of the non-graph staged operators
     // (the MMR greedy fold stages every step like pageRank's rounds)
