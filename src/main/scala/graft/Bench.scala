@@ -223,7 +223,7 @@ object Bench {
 
   /** Self-adjudicating steady timing: `reps` back-to-back runs per query,
     * reporting the per-query MEDIAN (and min). Two consecutive rounds of
-    * the single-shot steady pass needed manual BenchOne noise
+    * the single-shot steady pass needed manual single-query noise
     * adjudication on this shared host (±25% single-run band; r5/r6
     * scheduler spikes read as 3-10× on individual queries) — the median
     * of 3 makes the reported number robust to a one-off spike without
@@ -257,7 +257,7 @@ object Bench {
     String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
 
   /** Self-adjudication of in-suite outliers (r9, after two rounds of
-    * manual BenchOne re-measures): a steady median can be poisoned by
+    * manual single-query re-measures): a steady median can be poisoned by
     * accumulated executor/GC/host pressure late in the suite —
     * BENCH_r08 recorded q_group_ordered_concat at 7.64s median while
     * the same HEAD measured 1.24s in isolation. Any query whose steady
@@ -369,15 +369,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     LogProfiles.quietBench()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession.create(defaultCpus = 32)
 
     // Methodology "r7-cold+steady-median3" (ADOPTED in r7 — history:
     // r3 `total` compares to r4+ `total_cold`; r4-r6 ran ONE timed
@@ -394,7 +386,7 @@ object Bench {
     //     `queries_min`) — steady-state throughput extrapolates to a
     //     long-running cluster job, and the median self-adjudicates the
     //     ±25% single-run host-noise band that forced manual
-    //     graft.BenchOne re-measures in r5 (q_pipe_chunks 3.26s-vs-1.5s)
+    //     single-query re-measures in r5 (q_pipe_chunks 3.26s-vs-1.5s)
     //     and r6 (four frozen-core outliers). A real regression shifts
     //     all three reps; a scheduler spike shifts one.
     // Warm-up failures surface on stderr; only NonFatal is swallowed so

@@ -8,9 +8,9 @@ package graft
   * `log4j2.properties` now keeps that WARN visible; [[quietBench]]
   * reconfigures the running log4j2 context to the bundled
   * `log4j2-bench.properties` — the same config plus the broadcast DENY
-  * — and is called first thing by Bench/BenchOne/Verify/ScaleLadder/
-  * Explain mains, so those runs stay tail-safe however they are
-  * launched (sbt runMain, spark-submit, the driver). */
+  * — and is called first thing by the Bench/Verify/ScaleLadder/Profile
+  * mains, so those runs stay tail-safe however they are launched (sbt
+  * runMain, spark-submit, the driver). */
 object LogProfiles {
 
   def quietBench(): Unit = {

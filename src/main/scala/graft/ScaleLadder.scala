@@ -115,15 +115,7 @@ object ScaleLadder {
     // staged corpora are lazy, so unfiltered rungs cost nothing)
     val only = args.lift(2).map(_.split(',').toSet)
     val nBig = nSmall * ratio
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession.create(defaultCpus = 32)
     def f3(v: Double) =
       String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
 

@@ -17,19 +17,26 @@ object Tables {
   /** Per-path schema memo: schema INFERENCE (a footer-read job) costs
     * ~60-90 ms per `spark.read.parquet` call while a schema-supplied
     * read costs ~10 ms, and a bench/gate session constructs thousands
-    * of table reads over the same immutable paths (3 steady reps × a
-    * few tables × ~135 queries). Caching the inferred StructType is
-    * metadata caching — the exact service a catalog/metastore provides
-    * in a deployment — never data: every query still scans the parquet
-    * files for rows. Keyed by full path; a different sfDir is a
-    * different entry. */
+    * of table reads over the same paths (3 steady reps × a few tables ×
+    * ~135 queries). Caching the inferred StructType is metadata
+    * caching — the exact service a catalog/metastore provides in a
+    * deployment — never data: every query still scans the parquet
+    * files for rows. Each entry keeps the path's modification time it
+    * was inferred at: a table rewritten at the same path gets a fresh
+    * mtime and is inferred again (its entry replaced, so the map holds
+    * one entry per path), instead of being read with the old schema
+    * and silently losing its new columns. */
   private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.sql.types.StructType]()
+    String, (Long, org.apache.spark.sql.types.StructType)]()
 
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
-    val schema = schemaCache.computeIfAbsent(path,
-      p => spark.read.parquet(p).schema)
+    val p = new org.apache.hadoop.fs.Path(path)
+    val mtime = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .getFileStatus(p).getModificationTime
+    val (_, schema) = schemaCache.compute(path, (_, hit) =>
+      if (hit != null && hit._1 == mtime) hit
+      else (mtime, spark.read.parquet(path).schema))
     spark.read.schema(schema).parquet(path)
   }
 

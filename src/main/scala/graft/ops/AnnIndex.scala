@@ -31,17 +31,6 @@ import org.apache.spark.sql.functions._
   */
 object AnnIndex {
 
-  /** Opt-in stage timing (dev: -Dgraft.ann.profile=true) — attributes
-    * save/upsert wall-clock to quantizer training, encode, and writes. */
-  private def prof[A](name: String)(f: => A): A =
-    if (!sys.props.get("graft.ann.profile").contains("true")) f
-    else {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"[ann.prof] $name%-24s ${(System.nanoTime() - t0) / 1e9}%7.3f s")
-      r
-    }
-
   /** The directory holding the CURRENT committed index build — the
     * shared [[IndexVersioning]] resolution (highest committed `v_<n>`,
     * else the pre-r10 flat layout). */
@@ -86,15 +75,13 @@ object AnnIndex {
       // same first-k rows twice), and the two refinement aggregates are
       // INDEPENDENT jobs — overlapped from driver threads (guide §2.6)
       // so the build pays max(ivf, pq) wall instead of their sum.
-      val seeds = prof("save.seeds") {
-        Similarity.seedVectors(emb, math.max(numCells, codebookSize)) }
-      val (centroids, cbs) = prof("save.quantizers") {
-        Par.run2(
-          () => Similarity.lloydCentroidsFrom(emb, seeds.take(numCells),
-            numCells, iters = 1),
-          () => Similarity.pqCodebooksFrom(emb, seeds.take(codebookSize),
-            numSubspaces, codebookSize, subDims))
-      }
+      val seeds =
+        Similarity.seedVectors(emb, math.max(numCells, codebookSize))
+      val (centroids, cbs) = Par.run2(
+        () => Similarity.lloydCentroidsFrom(emb, seeds.take(numCells),
+          numCells, iters = 1),
+        () => Similarity.pqCodebooksFrom(emb, seeds.take(codebookSize),
+          numSubspaces, codebookSize, subDims))
       // persisted across every consumer below so the encode pass runs
       // once (compressed codes are 32x smaller than the raw vectors —
       // a spill-safe cache even at corpus scale). The encode carries the
@@ -108,24 +95,22 @@ object AnnIndex {
         // the three metadata writes (driver-side rows) and the corpus
         // encode+write are mutually independent — overlap them; the
         // codes write is the job that materializes the cache
-        prof("save.codes+meta-writes") {
-          Par.run[Unit](
-            () => encoded.drop("d")
-              .write.mode("overwrite").partitionBy("cell")
-              .parquet(s"$vdir/codes"),
-            () => centroids.zipWithIndex.map { case (w, c) => (c, w.toSeq) }
-              .toSeq.toDF("cell", "weights")
-              .repartition(1).write.mode("overwrite")
-              .parquet(s"$vdir/centroids"),
-            () => cbs.zipWithIndex.flatMap { case (cb, m) =>
-              cb.zipWithIndex.map { case (w, code) => (m, code, w.toSeq) }
-            }.toSeq.toDF("subspace", "code", "weights")
-              .repartition(1).write.mode("overwrite")
-              .parquet(s"$vdir/codebooks"),
-            () => Seq((numCells, numSubspaces, codebookSize, dims))
-              .toDF("num_cells", "num_subspaces", "codebook_size", "dims")
-              .repartition(1).write.mode("overwrite").parquet(s"$vdir/meta"))
-        }
+        Par.run[Unit](
+          () => encoded.drop("d")
+            .write.mode("overwrite").partitionBy("cell")
+            .parquet(s"$vdir/codes"),
+          () => centroids.zipWithIndex.map { case (w, c) => (c, w.toSeq) }
+            .toSeq.toDF("cell", "weights")
+            .repartition(1).write.mode("overwrite")
+            .parquet(s"$vdir/centroids"),
+          () => cbs.zipWithIndex.flatMap { case (cb, m) =>
+            cb.zipWithIndex.map { case (w, code) => (m, code, w.toSeq) }
+          }.toSeq.toDF("subspace", "code", "weights")
+            .repartition(1).write.mode("overwrite")
+            .parquet(s"$vdir/codebooks"),
+          () => Seq((numCells, numSubspaces, codebookSize, dims))
+            .toDF("num_cells", "num_subspaces", "codebook_size", "dims")
+            .repartition(1).write.mode("overwrite").parquet(s"$vdir/meta"))
         // both read the just-materialized cache and are independent:
         //  - compact id→cell manifest (ONE file, no cell partitioning):
         //    the upsert's replaced-id locate reads THIS instead of
@@ -138,16 +123,14 @@ object AnnIndex {
         //    distance distribution under THESE quantizers (`d` from the
         //    encode pass; approx-quantile state is bounded). driftReport
         //    compares each future delta batch against this p95.
-        prof("save.ids+stats-writes") {
-          Par.run[Unit](
-            () => encoded.select(col("vec_id"), col("cell"))
-              .repartition(1).write.mode("overwrite").parquet(s"$vdir/ids"),
-            () => encoded
-              .agg(count(lit(1)).as("n"),
-                percentile_approx(col("d"), lit(0.95), lit(10000))
-                  .as("p95_dist"))
-              .repartition(1).write.mode("overwrite").parquet(s"$vdir/stats"))
-        }
+        Par.run[Unit](
+          () => encoded.select(col("vec_id"), col("cell"))
+            .repartition(1).write.mode("overwrite").parquet(s"$vdir/ids"),
+          () => encoded
+            .agg(count(lit(1)).as("n"),
+              percentile_approx(col("d"), lit(0.95), lit(10000))
+                .as("p95_dist"))
+            .repartition(1).write.mode("overwrite").parquet(s"$vdir/stats"))
       } finally encoded.unpersist(blocking = false)
     }
   }
@@ -233,13 +216,13 @@ object AnnIndex {
         // `is_delta` tag keeps the empty-delta guard exact; both legs
         // are <= numCells rows: metadata. (Two sequential collects
         // before r14 — the union is one driver barrier, not two.)
-        val touchedTagged = prof("upsert.touched-cells") {
+        val touchedTagged =
           delta.select(col("cell"), lit(true).as("is_delta")).distinct()
             .unionByName(
               loadIds(spark, baseDir)
                 .join(broadcast(delta.select(col("vec_id"))), Seq("vec_id"))
                 .select(col("cell"), lit(false).as("is_delta")).distinct())
-            .collect().map(r => (r.getInt(0), r.getBoolean(1))) }
+            .collect().map(r => (r.getInt(0), r.getBoolean(1)))
         require(touchedTagged.exists(_._2),
           s"upsert($dir): empty delta — nothing to layer")
         val touched = touchedTagged.map(_._1).distinct.toSeq
@@ -252,17 +235,13 @@ object AnnIndex {
         val newCodes = survivors.unionByName(delta)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
-          prof("upsert.codes-write") {
-            newCodes
-              .write.mode("overwrite").partitionBy("cell")
-              .parquet(s"$vdir/codes")
-          }
+          newCodes
+            .write.mode("overwrite").partitionBy("cell")
+            .parquet(s"$vdir/codes")
           // this layer's slice of the ids manifest (its touched cells
           // only — readers chain the rest, exactly like codes)
-          prof("upsert.ids-write") {
-            newCodes.select(col("vec_id"), col("cell"))
-              .repartition(1).write.mode("overwrite").parquet(s"$vdir/ids")
-          }
+          newCodes.select(col("vec_id"), col("cell"))
+            .repartition(1).write.mode("overwrite").parquet(s"$vdir/ids")
         } finally newCodes.unpersist(blocking = false)
         IndexVersioning.writeBaseMarker(spark, vdir, baseV)
       } finally delta.unpersist(blocking = false)
@@ -437,7 +416,7 @@ object AnnIndex {
     val key = quantizerMemoKey(spark, dir)
     val hit = key.map(quantizerMemo.get).orNull
     if (hit != null) hit
-    else prof("loadQuantizers") {
+    else {
       val loaded = loadQuantizersImpl(spark, dir)
       key.foreach { k =>
         if (quantizerMemo.size() > 64) quantizerMemo.clear()

@@ -521,8 +521,6 @@ object Dedup {
         case Some(l: java.lang.Long) => l.longValue
         case _ => 0L // empty round frame: sum over zero rows is null
       }
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        System.err.println(s"[cc] round ${rounds + 1}: changed=$changed")
       // round i's eager stage has materialized; round i−1's blocks are
       // dead weight from here on — free them now, not at the cleaner's
       // 30-min cycle (the returned final frame is never released)

@@ -6,11 +6,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * consecutive rounds shipped queries past the recorded gate run): the
   * registered query surface must equal the `## q_` sections of
   * PLANS.md. PLANS.md is only regenerated by the gate routine
-  * (`runMain graft.Explain`), so a query added — or renamed, or
+  * (`runMain graft.Profile plan`), so a query added — or renamed, or
   * dropped — after the last gate run turns the whole suite red at
   * commit time instead of sailing into the snapshot unaudited.
   *
-  * Discipline this encodes: add/modify a query → rerun Explain + the
+  * Discipline this encodes: add/modify a query → rerun the plan dump + the
   * full verify gate → THEN commit. No Spark session needed here; it is
   * a pure file diff, so it stays red even under `testOnly`.
   */
@@ -20,7 +20,7 @@ class PlansSyncSpec extends AnyFunSuite {
     val f = new java.io.File("PLANS.md")
     assert(f.isFile,
       s"PLANS.md not found at ${f.getAbsolutePath} — run " +
-        "`sbt \"runMain graft.Explain\"` from the repo root")
+        "`sbt \"runMain graft.Profile plan\"` from the repo root")
     val planned = scala.io.Source.fromFile(f, "UTF-8")
       .getLines().filter(_.startsWith("## q_"))
       .map(_.stripPrefix("## ").trim).toSet

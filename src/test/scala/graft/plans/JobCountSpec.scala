@@ -1,16 +1,14 @@
 package graft.plans
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import graft.SparkSpecBase
 
 /** Job-count regression pins for the iterative family — the
-  * host-noise-free barrier metric (`graft.CountJobs` is the manual
-  * tool; this spec is its CI form). Every Spark job is a blocking
-  * driver barrier, so the job count is the scheduling cost that
-  * wall-clock benchmarks on a shared host keep mis-measuring — and,
-  * unlike wall time, it is exactly reproducible per fixture.
+  * host-noise-free barrier metric (`graft.Profile jobs` is the manual
+  * tool; this spec is its CI form, on the same counter). Every Spark
+  * job is a blocking driver barrier, so the job count is the
+  * scheduling cost that wall-clock benchmarks on a shared host keep
+  * mis-measuring — and, unlike wall time, it is exactly reproducible
+  * per fixture.
   *
   * These pins also close PlanGuardSpec's acknowledged blind spot for
   * eagerly-staged subtrees (PlanGuardSpec.scala:38-45): the graph
@@ -30,42 +28,8 @@ import graft.SparkSpecBase
   */
 class JobCountSpec extends SparkSpecBase {
 
-  /** Run one registered query to the noop sink and count the jobs it
-    * launches. The listener bus is async: poll until the counter is
-    * stable for three consecutive 200 ms windows rather than sleeping
-    * a fixed interval (the undercount failure mode ADVICE r8 flagged
-    * in CountJobs). Counting is scoped to a per-test JOB GROUP so
-    * suites running in parallel on the shared session cannot inflate
-    * the number: jobs submitted from this thread carry the group id,
-    * and AQE's async stage materializations inherit it too (Spark
-    * captures the submitting thread's local properties into them). */
-  private def countJobs(name: String): Int = {
-    val fn = graft.SparkEntry.queries(name)
-    val group = s"graft-jobcount-$name"
-    val jobs = new AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        if (Option(js.properties)
-            .exists(p => p.getProperty("spark.jobGroup.id") == group))
-          jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    spark.sparkContext.setJobGroup(group, s"job-count pin for $name")
-    try {
-      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      var stable = 0
-      var last = -1
-      while (stable < 3) {
-        Thread.sleep(200)
-        val now = jobs.get()
-        if (now == last) stable += 1 else { stable = 0; last = now }
-      }
-      last
-    } finally {
-      spark.sparkContext.clearJobGroup()
-      spark.sparkContext.removeSparkListener(listener)
-    }
-  }
+  private def countJobs(name: String): Int =
+    graft.Profile.countJobs(spark, name, sfDir).jobs
 
   private val bounds = Seq(
     // measured +20%, rounded up
@@ -84,7 +48,7 @@ class JobCountSpec extends SparkSpecBase {
     "q_text_bpe_tokens" -> 28,
     "q_dedup_incremental" -> 11,
     // round-9 layout/warehouse/sketch additions (measured via
-    // CountJobs at sf0.001: 6 / 8 / 5 / 5 / 18) — flat pipelines whose
+    // the job counter at sf0.001: 6 / 8 / 5 / 5 / 18) — flat pipelines whose
     // only legitimate barriers are the broadcast stats frames and, for
     // triangles, the shared staged pair generation
     "q_layout_zorder" -> 8,
