@@ -128,16 +128,23 @@ object Profile {
       executions: Seq[Execution])
 
   /** Run one registered query to the noop sink and count the jobs it
-    * launches. Counting is scoped to a per-call job group, so other
+    * launches ([[countJobsOf]]). */
+  def countJobs(spark: SparkSession, name: String, sfDir: String): JobCount = {
+    val fn = SparkEntry.queries(name)
+    countJobsOf(spark, name)(noop(fn(spark, sfDir)))
+  }
+
+  /** Run `body` and count the jobs it launches, under `label`. Counting
+    * is scoped to a per-call job group, so other
     * work on a shared session is not counted: jobs and SQL executions
     * started from this thread carry the group id, and AQE's stage
     * materializations inherit it (Spark copies the submitting thread's
     * local properties into them). The listener bus is async, so the
     * counters are read once they are stable for three consecutive
     * 200 ms windows, which a fixed sleep undercounts on a loaded host. */
-  def countJobs(spark: SparkSession, name: String, sfDir: String): JobCount = {
-    val fn = SparkEntry.queries(name)
-    val group = s"graft-jobcount-$name"
+  def countJobsOf(spark: SparkSession, label: String)(body: => Unit)
+      : JobCount = {
+    val group = s"graft-jobcount-$label"
     val jobs = new AtomicInteger(0)
     val jobsByExec = new ConcurrentHashMap[Long, Integer]()
     val starts = new ConcurrentHashMap[Long, SparkListenerSQLExecutionStart]()
@@ -168,7 +175,7 @@ object Profile {
     // no job description: executions then carry their call site
     spark.sparkContext.setJobGroup(group, null)
     try {
-      noop(fn(spark, sfDir))
+      body
       var stable = 0
       var last = (-1, -1)
       while (stable < 3) {
@@ -187,7 +194,7 @@ object Profile {
           names.count(_ == "BroadcastQueryStage"),
           names.count(n => n == "ReusedExchange" || n == "TableCacheQueryStage"))
       }
-      JobCount(name, last._1, executions)
+      JobCount(label, last._1, executions)
     } finally {
       spark.sparkContext.clearJobGroup()
       spark.sparkContext.removeSparkListener(listener)

@@ -15,13 +15,12 @@ import org.apache.spark.sql.functions._
   *   <dir>/meta/       (numCells, numSubspaces, codebookSize, dims)
   *
   * The cell-partitioned codes layout is the scale feature: a query
-  * probes nProbe of numCells cells, and the probe join's broadcast keys
-  * dynamically prune the parquet scan to those directories (Spark's
-  * dynamic partition pruning fires on the broadcast equi-join against
-  * the partition column — at deployment scale that is nProbe/numCells
-  * of the corpus read instead of all of it, before any compute).
-  * Centroids and codebooks are metadata-scale (same collect budget as
-  * the in-memory path).
+  * probes nProbe of numCells cells, picked on the driver from the
+  * query vectors, and the codes scan carries them as a static
+  * `cell IN (...)` partition filter — at deployment scale that is
+  * nProbe/numCells of the corpus read instead of all of it, pruned at
+  * planning time. Centroids and codebooks are metadata-scale (same
+  * collect budget as the in-memory path).
   *
   * Query results are IDENTICAL to ivfPqTopK with the same parameters —
   * both halves call the same shared [[Similarity.encodeIvfPq]] /
@@ -168,9 +167,10 @@ object AnnIndex {
     * changed, not the quantizer), and without the union its stale row
     * would survive in the old, untouched cell — a duplicate vec_id with
     * stale codes in every probe (r13 ADVICE). Locating replaced ids
-    * joins the base chain's (vec_id, cell) pairs against the broadcast
-    * delta ids — a column-pruned scan that never reads the wide codes
-    * column.
+    * filters the base chain's (vec_id, cell) pairs by the delta ids,
+    * collected to the driver with the delta's cells — a column-pruned
+    * scan that never reads the wide codes column. Four jobs: the delta
+    * collect, the locate, the codes write and the ids write.
     *
     * Scale shape: WRITE IO is O(touched cells + delta), never O(corpus)
     * — at deployment cell counts (thousands) a 0.1% daily delta touches
@@ -206,32 +206,29 @@ object AnnIndex {
       val delta = Similarity.encodeIvfPq(newEmb, centroids, cbs, subDims)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
-        // ONE collect finds every touched cell: the delta's own cells
-        // UNION the cells holding a REPLACED id anywhere in the base
-        // chain — the new embedding may assign elsewhere, and the old
-        // cell must be rewritten too or its stale row survives via
-        // _BASE (r13 ADVICE high). Broadcast the bounded delta-id side;
-        // the base side is the compact ids manifest ([[loadIds]] — a
-        // handful of files, not the cell layout's thousands). The
-        // `is_delta` tag keeps the empty-delta guard exact; both legs
-        // are <= numCells rows: metadata. (Two sequential collects
-        // before r14 — the union is one driver barrier, not two.)
-        val touchedTagged =
-          delta.select(col("cell"), lit(true).as("is_delta")).distinct()
-            .unionByName(
-              loadIds(spark, baseDir)
-                .join(broadcast(delta.select(col("vec_id"))), Seq("vec_id"))
-                .select(col("cell"), lit(false).as("is_delta")).distinct())
-            .collect().map(r => (r.getInt(0), r.getBoolean(1)))
-        require(touchedTagged.exists(_._2),
+        // the delta's (vec_id, cell) pairs on the driver — the delta is a
+        // bounded batch, and this collect also materializes its cache.
+        // Touched = the delta's own cells UNION the cells holding a
+        // REPLACED id anywhere in the base chain: the new embedding may
+        // assign elsewhere, and the old cell must be rewritten too or its
+        // stale row survives via _BASE (r13 ADVICE high). The locate
+        // scans the compact ids manifest ([[loadIds]] — a handful of
+        // files, not the cell layout's thousands) with the delta ids as
+        // a literal set; a chain holds each id once, so it returns at
+        // most one row per delta id.
+        val deltaCells = delta.select(col("vec_id"), col("cell")).collect()
+        require(deltaCells.nonEmpty,
           s"upsert($dir): empty delta — nothing to layer")
-        val touched = touchedTagged.map(_._1).distinct.toSeq
-        // touched cells rewritten fully: base survivors (anti-join on
-        // the replaced ids — the delta is the small side at deployment)
-        // + the delta rows
+        val deltaIds = deltaCells.map(_.get(0)).filter(_ != null).toSeq
+        val touched = (deltaCells.map(_.getInt(1)) ++
+          loadIds(spark, baseDir).filter(col("vec_id").isin(deltaIds: _*))
+            .select(col("cell")).collect().map(_.getInt(0)))
+          .distinct.sorted.toSeq
+        // touched cells rewritten fully: base survivors (minus the
+        // replaced ids) + the delta rows
         val survivors = loadCodes(spark, baseDir)
-          .filter(col("cell").isin(touched: _*))
-          .join(delta.select(col("vec_id")), Seq("vec_id"), "left_anti")
+          .filter(col("cell").isin(touched: _*) &&
+            !col("vec_id").isin(deltaIds: _*))
         val newCodes = survivors.unionByName(delta)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
@@ -239,9 +236,10 @@ object AnnIndex {
             .write.mode("overwrite").partitionBy("cell")
             .parquet(s"$vdir/codes")
           // this layer's slice of the ids manifest (its touched cells
-          // only — readers chain the rest, exactly like codes)
+          // only — readers chain the rest, exactly like codes); one
+          // file, read from the cache by one task
           newCodes.select(col("vec_id"), col("cell"))
-            .repartition(1).write.mode("overwrite").parquet(s"$vdir/ids")
+            .coalesce(1).write.mode("overwrite").parquet(s"$vdir/ids")
         } finally newCodes.unpersist(blocking = false)
         IndexVersioning.writeBaseMarker(spark, vdir, baseV)
       } finally delta.unpersist(blocking = false)
@@ -283,14 +281,8 @@ object AnnIndex {
       .semDedupAdmitCandidates(delta, baseVecs, centroids, minCos, nProbe)
       .groupBy(col("vec_id")).agg(count(lit(1)).as("n_dups_base"))
     val assignU = udf((v: Seq[Float]) => Similarity.nearestCell(centroids)(v))
-    val probesU = udf((v: Seq[Float]) => {
-      val ds = centroids.zipWithIndex.map { case (cv, c) =>
-        var d = 0.0; var i = 0
-        while (i < cv.length) { val x = v(i) - cv(i); d += x * x; i += 1 }
-        (c, d)
-      }
-      ds.sortBy(_._2).take(nProbe).map(_._1)
-    })
+    val probesU = udf((v: Seq[Float]) =>
+      Similarity.nearestCells(centroids, nProbe)(v))
     // the delta's normed+assigned frame feeds both self-join sides and
     // the final projection — compute-once, single-plan consumer shape
     val dd = Checkpoints.stageTransient(
@@ -372,32 +364,35 @@ object AnnIndex {
       s"index at $dir: no '$part' anywhere in its _BASE chain — " +
         "not a complete committed build"))
 
-  /** Load the index's quantizers: (centroids by cell, codebooks by
-    * (subspace, code), subspace dimensionality). Driver-side,
-    * metadata-scale; each part resolves through the `_BASE` chain
-    * ([[resolvePart]]). `dir` must already be version-resolved
-    * ([[resolveDir]]) — resolving HERE would let a rebuild that commits
-    * between the quantizer and codes loads hand the caller a mixed
-    * index; the caller resolves ONCE and passes the pinned build dir
-    * to both loads. */
-  /** Per-version quantizer memo: a committed `v_<n>` dir is write-once
-    * (publish is atomic, quantizers are pinned for the version's
-    * lifetime), so the driver-side (centroids, codebooks, subDims)
-    * triple is immutable metadata — and the incremental flow loads it
-    * 2-4× per query (upsert + probe + drift/semdedup legs) at ~0.2 s
-    * per load. Bounded: quantizer matrices are O(cells + codes) doubles;
-    * the map is cleared past 64 entries (a long-running driver cycling
-    * many indexes just re-pays one load). */
-  private val quantizerMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, (Array[Array[Double]], Array[Array[Array[Double]]], Int)]()
+  /** Per-version quantizer memo: the driver-side (centroids, codebooks,
+    * subDims) triple is immutable metadata for a committed build, and
+    * the incremental flow loads it 2-4× per query (upsert + probe +
+    * drift/semdedup legs); a hit costs a few file-status calls, a miss
+    * three collect jobs. Bounded: quantizer matrices are O(cells +
+    * codes) doubles, and past 64 entries the oldest entry is evicted (a
+    * long-running driver cycling many indexes re-pays one load). */
+  private val QuantizerMemoMax = 64
+  private val quantizerMemo = java.util.Collections.synchronizedMap(
+    new java.util.LinkedHashMap[String,
+        (Array[Array[Double]], Array[Array[Array[Double]]], Int)]() {
+      override def removeEldestEntry(e: java.util.Map.Entry[String,
+          (Array[Array[Double]], Array[Array[Array[Double]]], Int)])
+          : Boolean = size() > QuantizerMemoMax
+    })
 
   /** Memo key for a quantizer load: the three RESOLVED part paths plus
     * each part directory's mtime. Chain-aware — a layered `v_<n+1>`
     * whose quantizer parts resolve to its ancestor's files shares the
     * ancestor's entry (the upsert-then-probe flow would otherwise
-    * re-collect identical metadata per version) — and rebuild-safe: a
-    * recreated path gets a fresh mtime, so stale quantizers can never
-    * be served. None (no memo) when any part is missing or unstatable. */
+    * re-collect identical metadata per version). None (no memo) when any
+    * part is missing or unstatable.
+    *
+    * Assumes write-once `v_<n>` directories: [[IndexVersioning.publish]]
+    * always writes a fresh, never-reused version dir and never rewrites
+    * a committed one. The mtime only guards a path recreated after a GC;
+    * a rewrite IN PLACE within one mtime tick of the filesystem would
+    * serve stale quantizers, so a layout that overwrites a version in
+    * place must put a content fingerprint in this key. */
   private def quantizerMemoKey(spark: SparkSession,
       dir: String): Option[String] =
     try {
@@ -411,6 +406,14 @@ object AnnIndex {
       }.mkString(";"))
     } catch { case _: java.io.IOException => None }
 
+  /** Load the index's quantizers: (centroids by cell, codebooks by
+    * (subspace, code), subspace dimensionality). Driver-side,
+    * metadata-scale; each part resolves through the `_BASE` chain
+    * ([[resolvePart]]). `dir` must already be version-resolved
+    * ([[resolveDir]]) — resolving HERE would let a rebuild that commits
+    * between the quantizer and codes loads hand the caller a mixed
+    * index; the caller resolves ONCE and passes the pinned build dir
+    * to both loads. */
   private[graft] def loadQuantizers(spark: SparkSession, dir: String)
       : (Array[Array[Double]], Array[Array[Array[Double]]], Int) = {
     val key = quantizerMemoKey(spark, dir)
@@ -418,10 +421,7 @@ object AnnIndex {
     if (hit != null) hit
     else {
       val loaded = loadQuantizersImpl(spark, dir)
-      key.foreach { k =>
-        if (quantizerMemo.size() > 64) quantizerMemo.clear()
-        quantizerMemo.putIfAbsent(k, loaded)
-      }
+      key.foreach(quantizerMemo.putIfAbsent(_, loaded))
       loaded
     }
   }
@@ -511,9 +511,13 @@ object AnnIndex {
   }
 
   /** Probe a persisted index: top-k ADC candidates from the probed
-    * cells' code partitions, exact-cosine re-rank against `emb` (the
-    * raw-vector store lives outside the index). Output schema and
-    * values match ivfPqTopK exactly. */
+    * cells' code partitions only (a static partition filter, through
+    * the `_BASE` chain), exact-cosine re-rank against the candidates'
+    * raw vectors in `emb` (the raw-vector store lives outside the
+    * index). The work runs here, in two jobs (a third collects a query
+    * frame that is not local), and the result comes back as a local
+    * frame ([[Similarity.ivfPqScore]]). Output schema and values match
+    * ivfPqTopK exactly. */
   def topK(spark: SparkSession, dir: String, emb: DataFrame,
       queries: DataFrame, k: Int, nProbe: Int = 4,
       refine: Int = 5): DataFrame = {
@@ -537,22 +541,12 @@ object AnnIndex {
   def probeCandidates(queries: DataFrame, codes: DataFrame,
       centroids: Array[Array[Double]], cbs: Array[Array[Array[Double]]],
       subDims: Int, nProbe: Int = 4): DataFrame = {
-    val probesU = udf((v: Seq[Float]) => {
-      val ds = centroids.zipWithIndex.map { case (cv, c) =>
-        var d = 0.0; var i = 0
-        while (i < cv.length) { val x = v(i) - cv(i); d += x * x; i += 1 }
-        (c, d)
-      }
-      ds.sortBy(_._2).take(nProbe).map(_._1)
-    })
+    val probesU = udf((v: Seq[Float]) =>
+      Similarity.nearestCells(centroids, nProbe)(v))
     // per-query ADC table computed ONCE per arriving row (numSubspaces
     // × codebookSize doubles), then each candidate's distance is a
     // codes-length gather over it
-    val dtableU = udf((v: Seq[Float]) => {
-      val dv = v.map(_.toDouble).toIndexedSeq
-      Array.tabulate(cbs.length, cbs.head.length)((m, c) =>
-        Similarity.pqD2(cbs(m)(c), Similarity.pqSub(subDims)(dv, m)))
-    })
+    val dtableU = udf((v: Seq[Float]) => Similarity.adcTable(cbs, subDims)(v))
     val adistU = udf((cs: Seq[Int], dt: Seq[Seq[Double]]) => {
       var s = 0.0; var m = 0
       while (m < cs.length) { s += dt(m)(cs(m)); m += 1 }

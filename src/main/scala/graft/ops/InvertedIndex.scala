@@ -13,12 +13,11 @@ import org.apache.spark.sql.functions._
   *   <dir>/stats/    (n_docs, avgdl) — 1 row
   *
   * The term-bucket partitioning is the scale feature: a query's terms
-  * hash to a handful of the [[TermBuckets]] directories, and the bucket
-  * predicate is a LITERAL set computed on the driver, so the pruning is
-  * static — the scan plans over buckets/64 of the postings before any
-  * runtime filtering (the in-bucket `term IN (...)` predicate then
-  * pushes into the parquet row groups). `dl` is denormalized into the
-  * postings, so probing needs no doc-lengths join.
+  * hash to a handful of the [[TermBuckets]] directories, computed on the
+  * driver, and a probe lists and scans only those directories (the
+  * in-bucket `term IN (...)` predicate then pushes into the parquet row
+  * groups). `dl` is denormalized into the postings, so probing needs no
+  * doc-lengths join.
   *
   * Query results are IDENTICAL to `bm25TopK` with the same parameters —
   * both paths call the shared [[KeywordSearch.bm25Rank]] over a
@@ -39,7 +38,7 @@ object InvertedIndex {
       .cast("long"), lit(TermBuckets.toLong))
 
   /** The same bucket, computed on the driver for the query's literal
-    * term set — this is what makes the partition pruning STATIC. */
+    * term set — a probe lists only these buckets' directories. */
   private[ops] def bucketOf(term: String): Long = {
     val d = java.security.MessageDigest.getInstance("MD5")
       .digest(term.getBytes("UTF-8"))
@@ -71,18 +70,21 @@ object InvertedIndex {
     }
   }
 
-  /** BM25 top-k for a bag-of-terms query against the persisted index:
-    * static bucket pruning + in-bucket term pushdown, then the shared
-    * scoring. Output schema and values are identical to
+  /** BM25 top-k for a bag-of-terms query against the persisted index.
+    * Only the query's own `term_bucket=<b>` directories are listed and
+    * scanned (those that exist: a term absent from the corpus may hash
+    * to a bucket that was never written), under the memoized schema
+    * with the postings root as `basePath`, so the probe pays no
+    * partition-discovery job over all [[TermBuckets]] directories. The
+    * `term_bucket` predicate stays in the plan as a partition filter,
+    * and the in-bucket `term IN (...)` predicate pushes into the parquet
+    * row groups. The 1-row stats are read once as driver constants.
+    * Output schema and values are identical to
     * [[KeywordSearch.bm25TopK]] over the same corpus. */
   def bm25TopK(spark: SparkSession, dir: String, terms: Seq[String],
       k: Int = 10, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(terms.nonEmpty, "empty query")
     val v = IndexVersioning.resolveDir(spark, dir)
-    // limit(1) is a no-op on the 1-row stats table, but it makes the
-    // bound STRUCTURAL: the scoring join broadcasts stats, and a plan
-    // guard (or a reviewer) can prove the broadcast bounded from the
-    // plan alone instead of trusting the writer
     // schema-memo reads (keyed by layout root): the versioned layout
     // re-infers fixed writer schemas on every fresh v_<n> otherwise
     val root = {
@@ -90,14 +92,22 @@ object InvertedIndex {
       if (p.getName.matches("v_\\d+")) p.getParent.toString else v
     }
     val stats = graft.sources.SchemaMemo
-      .read(spark, s"invidx.stats@$root", s"$v/stats").limit(1)
-    val buckets = terms.map(bucketOf).distinct.map(x => x: Any)
-    val termList = terms.map(x => x: Any)
+      .read(spark, s"invidx.stats@$root", s"$v/stats").head()
+    val postings = s"$v/postings"
+    val fs = new org.apache.hadoop.fs.Path(postings)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val buckets = terms.map(bucketOf).distinct
+    val paths = buckets.map(x => s"$postings/term_bucket=$x")
+      .filter(p => fs.exists(new org.apache.hadoop.fs.Path(p)))
+    // no queried bucket exists: scan the root, whose bucket filter
+    // prunes every directory, for the empty frame of the right type
     val tf = graft.sources.SchemaMemo
-      .read(spark, s"invidx.postings@$root", s"$v/postings")
+      .readAll(spark, s"invidx.postings@$root", postings,
+        if (paths.nonEmpty) paths else Seq(postings))
       .filter(col("term_bucket").isin(buckets: _*) &&
-        col("term").isin(termList: _*))
+        col("term").isin(terms: _*))
       .select(col("doc_id"), col("dl"), col("term"), col("tf"))
-    KeywordSearch.bm25Rank(tf, "doc_id", stats, k, k1, b)
+    KeywordSearch.bm25Rank(tf, "doc_id", stats.getAs[Long]("n_docs"),
+      KeywordSearch.avgdlOf(stats), k, k1, b)
   }
 }

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Keyword retrieval and statistical language-model scoring over a
@@ -76,35 +76,47 @@ object KeywordSearch {
     val base = Checkpoints.stageTransient(
       docs.select(col(idCol), size(toksArr).as("dl"),
         filter(toksArr, t => t.isin(termList: _*)).as("ts")))
-    // 1-row corpus stats: N and avgdl (exact integer sum / count).
+    // 1-row corpus stats, read once as driver constants: N and avgdl
+    // (exact integer sum / count)
     val stats = base.agg(count(lit(1)).as("n_docs"),
-      (sum(col("dl")).cast("double") / count(lit(1))).as("avgdl"))
+      (sum(col("dl")).cast("double") / count(lit(1))).as("avgdl")).head()
     // dl rides through the tf groupBy, so no second join against a
     // lengths table is needed downstream
     val tf = base.select(col(idCol), col("dl"), explode(col("ts")).as("term"))
       .groupBy(col(idCol), col("dl"), col("term"))
       .agg(count(lit(1)).as("tf"))
-    bm25Rank(tf, idCol, stats, k, k1, b)
+    bm25Rank(tf, idCol, stats.getAs[Long]("n_docs"), avgdlOf(stats),
+      k, k1, b)
   }
 
+  /** `avgdl` of a stats row; an empty corpus has none (0 / 0 is null)
+    * and no postings either, so any constant ranks the same nothing. */
+  private[ops] def avgdlOf(stats: Row): Double =
+    if (stats.isNullAt(stats.fieldIndex("avgdl"))) 0.0
+    else stats.getAs[Double]("avgdl")
+
   /** BM25 scoring + top-k over a prepared term-frequency frame
-    * (idCol, dl, term, tf — one row per (doc, term)) and a 1-row stats
-    * frame (n_docs, avgdl). Shared by the from-scratch path above and
-    * the persisted [[InvertedIndex]] probe, so the two paths stay
-    * arithmetic-identical by construction (one oracle verifies both). */
-  private[ops] def bm25Rank(tf: DataFrame, idCol: String, stats: DataFrame,
-      k: Int, k1: Double, b: Double): DataFrame = {
+    * (idCol, dl, term, tf) and the corpus constants N and avgdl. Shared
+    * by the from-scratch path above and the persisted [[InvertedIndex]]
+    * probe, so the two paths stay arithmetic-identical by construction
+    * (one oracle verifies both).
+    *
+    * Precondition: `tf` has one row per (doc, term), which both callers
+    * guarantee by grouping on (doc, dl, term) over unique doc ids. That
+    * makes `df` a plain `count(1) over (partition by term)`: one pass
+    * over `tf`, no distinct aggregate and no join back. */
+  private[ops] def bm25Rank(tf: DataFrame, idCol: String, nDocs: Long,
+      avgdl: Double, k: Int, k1: Double, b: Double): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val dfs = tf.groupBy(col("term"))
-      .agg(countDistinct(col(idCol)).as("df"))
     val idf = ln9(lit(1.0) +
-      (col("n_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5)))
+      (lit(nDocs) - col("df") + lit(0.5)) / (col("df") + lit(0.5)))
     val contrib = round(
       col("idf") * (col("tf") * (lit(k1) + 1)) /
         (col("tf") + lit(k1) * (lit(1.0) - lit(b) +
-          lit(b) * col("dl") / col("avgdl"))), 9)
+          lit(b) * col("dl") / lit(avgdl))), 9)
     val scored = tf
-      .join(broadcast(dfs.crossJoin(stats).withColumn("idf", idf)), "term")
+      .withColumn("df", count(lit(1)).over(Window.partitionBy(col("term"))))
+      .withColumn("idf", idf)
       .withColumn("contrib", contrib.cast("decimal(28,12)"))
       .groupBy(col(idCol), col("dl"))
       .agg(round(sum(col("contrib")).cast("double"), 6).as("score"),

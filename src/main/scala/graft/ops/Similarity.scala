@@ -338,6 +338,19 @@ object Similarity {
       .select(col("query_id"), col("rk"), col("vec_id").as("neighbor_id"), col("cos"))
   }
 
+  /** The `nProbe` cells nearest to `v` by squared L2 to each centroid,
+    * distance ties to the lower cell (a stable sort): the probe set of
+    * every IVF path and of its DuckDB mirrors' `ORDER BY dist, cell`. */
+  private[ops] def nearestCells(cs: Array[Array[Double]], nProbe: Int)
+      (v: Seq[Float]): Array[Int] = {
+    val ds = cs.zipWithIndex.map { case (cv, c) =>
+      var d = 0.0; var i = 0
+      while (i < cv.length) { val x = v(i) - cv(i); d += x * x; i += 1 }
+      (c, d)
+    }
+    ds.sortBy(_._2).take(nProbe).map(_._1)
+  }
+
   private[ops] def nearestCell(cs: Array[Array[Double]])(v: Seq[Float]): Int = {
     var best = 0; var bestD = Double.MaxValue; var c = 0
     while (c < cs.length) {
@@ -513,14 +526,7 @@ object Similarity {
     import org.apache.spark.sql.expressions.Window
     val centroids = ivfCentroids(emb, numCells)
     val assign = udf((v: Seq[Float]) => nearestCell(centroids)(v))
-    val probes = udf((v: Seq[Float]) => {
-      val ds = centroids.zipWithIndex.map { case (cv, c) =>
-        var d = 0.0; var i = 0
-        while (i < cv.length) { val x = v(i) - cv(i); d += x * x; i += 1 }
-        (c, d)
-      }
-      ds.sortBy(_._2).take(nProbe).map(_._1)
-    })
+    val probes = udf((v: Seq[Float]) => nearestCells(centroids, nProbe)(v))
 
     val e = withNorm(emb, "vec_id", "embedding")
       .withColumn("cell", assign(col("v").cast("array<float>")))
@@ -562,14 +568,7 @@ object Similarity {
     import org.apache.spark.sql.expressions.Window
     val centroids = ivfCentroids(emb, numCells)
     val assign = udf((v: Seq[Float]) => nearestCell(centroids)(v))
-    val probes = udf((v: Seq[Float]) => {
-      val ds = centroids.zipWithIndex.map { case (cv, c) =>
-        var d = 0.0; var i = 0
-        while (i < cv.length) { val x = v(i) - cv(i); d += x * x; i += 1 }
-        (c, d)
-      }
-      ds.sortBy(_._2).take(nProbe).map(_._1)
-    })
+    val probes = udf((v: Seq[Float]) => nearestCells(centroids, nProbe)(v))
     val e = emb.select(col("vec_id"), asDouble(col("embedding")).as("v"),
       col(labelCol).as("neighbor_label"))
       .withColumn("nrm", norm(col("v")))
@@ -609,14 +608,7 @@ object Similarity {
   def embeddingDecontaminate(emb: DataFrame, probes: DataFrame,
       minCos: Double, numCells: Int = 16, nProbe: Int = 4): DataFrame = {
     val centroids = ivfCentroids(emb, numCells)
-    val probeCells = udf((v: Seq[Float]) => {
-      val ds = centroids.zipWithIndex.map { case (cv, c) =>
-        var d = 0.0; var i = 0
-        while (i < cv.length) { val x = v(i) - cv(i); d += x * x; i += 1 }
-        (c, d)
-      }
-      ds.sortBy(_._2).take(nProbe).map(_._1)
-    })
+    val probeCells = udf((v: Seq[Float]) => nearestCells(centroids, nProbe)(v))
     val assign = udf((v: Seq[Float]) => nearestCell(centroids)(v))
     val e = withNorm(emb, "vec_id", "embedding")
       .withColumn("cell", assign(col("v").cast("array<float>")))
@@ -653,14 +645,7 @@ object Similarity {
   def semDedupAdmitCandidates(delta: DataFrame, baseWithCells: DataFrame,
       centroids: Array[Array[Double]], minCos: Double,
       nProbe: Int = 4): DataFrame = {
-    val probeCells = udf((v: Seq[Float]) => {
-      val ds = centroids.zipWithIndex.map { case (cv, c) =>
-        var d = 0.0; var i = 0
-        while (i < cv.length) { val x = v(i) - cv(i); d += x * x; i += 1 }
-        (c, d)
-      }
-      ds.sortBy(_._2).take(nProbe).map(_._1)
-    })
+    val probeCells = udf((v: Seq[Float]) => nearestCells(centroids, nProbe)(v))
     val b = baseWithCells
       .select(col("vec_id").as("base_id"), col("cell"),
         asDouble(col("embedding")).as("bv"))
@@ -758,7 +743,7 @@ object Similarity {
       val dv = v.map(_.toDouble).toIndexedSeq
       Array.tabulate(numSubspaces)(m => pqArgmin(cbs(m), sub(dv, m)))
     })
-    val dtables = pqDtables(queries, cbs, numSubspaces, codebookSize, subDims)
+    val dtables = pqDtables(queries, cbs, subDims)
     val adistU = udf((codes: Seq[Int], qid: Long) => {
       val dt = dtables(qid)
       var s = 0.0; var m = 0
@@ -972,14 +957,18 @@ object Similarity {
 
   /** Per-query ADC lookup tables (queries are metadata-scale). */
   private def pqDtables(queries: DataFrame, cbs: Array[Array[Array[Double]]],
-      numSubspaces: Int, codebookSize: Int,
-      subDims: Int): Map[Long, Array[Array[Double]]] = {
-    val sub = pqSub(subDims) _
+      subDims: Int): Map[Long, Array[Array[Double]]] =
     queries.select(col("vec_id"), col("embedding")).collect().map { r =>
-      val qv = r.getSeq[Float](1).map(_.toDouble).toIndexedSeq
-      r.getLong(0) -> Array.tabulate(numSubspaces, codebookSize)((m, c) =>
-        pqD2(cbs(m)(c), sub(qv, m)))
+      r.getLong(0) -> adcTable(cbs, subDims)(r.getSeq[Float](1))
     }.toMap
+
+  /** A query's ADC lookup table: squared distance from each subvector
+    * to each code of its subspace's codebook, (subspace, code). */
+  private[ops] def adcTable(cbs: Array[Array[Array[Double]]], subDims: Int)
+      (v: Seq[Float]): Array[Array[Double]] = {
+    val qv = v.map(_.toDouble).toIndexedSeq
+    Array.tabulate(cbs.length, cbs.head.length)((m, c) =>
+      pqD2(cbs(m)(c), pqSub(subDims)(qv, m)))
   }
 
   def pqTopK(emb: DataFrame, queries: DataFrame, k: Int,
@@ -994,7 +983,7 @@ object Similarity {
       val dv = v.map(_.toDouble).toIndexedSeq
       Array.tabulate(numSubspaces)(m => pqArgmin(cbs(m), sub(dv, m)))
     })
-    val dtables = pqDtables(queries, cbs, numSubspaces, codebookSize, subDims)
+    val dtables = pqDtables(queries, cbs, subDims)
     val adistU = udf((codes: Seq[Int], qid: Long) => {
       val dt = dtables(qid)
       var s = 0.0; var m = 0
@@ -1099,53 +1088,137 @@ object Similarity {
 
   /** Query side of IVF-PQ over an already-encoded (vec_id, cell, codes)
     * frame — `codes` may be freshly built (ivfPqTopK) or scanned back
-    * from a persisted AnnIndex, where the probe join's broadcast keys
-    * dynamically prune the cell-partitioned parquet layout. `emb`
-    * supplies raw vectors for the exact re-rank only. */
+    * from a persisted AnnIndex. `emb` supplies raw vectors for the exact
+    * re-rank only. The queries are metadata-scale and collected for
+    * their ADC tables, so the driver also picks each query's probe cells
+    * ([[nearestCells]]); the codes scan then carries them as a static
+    * `cell IN (...)` filter, which on the cell-partitioned layout prunes
+    * the unprobed directories at planning time. Then:
+    *
+    *  1. ONE map pass over the probed codes keeps, per partition and
+    *     query, the top k·refine candidates by (adist ASC, vec_id ASC)
+    *     and collects them: at most partitions × queries × k·refine rows;
+    *  2. the driver merges them to each query's top k·refine and fetches
+    *     the raw vectors of those ids only (`vec_id IN (...)`);
+    *  3. the driver re-ranks each query's candidates by exact cosine
+    *     (cos DESC, neighbor_id ASC) with the engine's arithmetic
+    *     ([[cosine]]) and keeps k.
+    *
+    * Two jobs, plus one when the query frame is not local. Ids are
+    * longs and query ids unique (they key the ADC tables). A candidate
+    * with no raw vector in `emb` drops out, as an inner join would drop
+    * it. Output: a local frame (query_id, rk, neighbor_id, adist, cos);
+    * rk ranks the re-scored cosine, adist is the rounded ADC distance. */
   private[ops] def ivfPqScore(codes: DataFrame, emb: DataFrame,
       queries: DataFrame, centroids: Array[Array[Double]],
       cbs: Array[Array[Array[Double]]], k: Int, nProbe: Int,
       refine: Int, subDims: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val probesU = udf((v: Seq[Float]) => {
-      val ds = centroids.zipWithIndex.map { case (cv, c) =>
-        var d = 0.0; var i = 0
-        while (i < cv.length) { val x = v(i) - cv(i); d += x * x; i += 1 }
-        (c, d)
+    import org.apache.spark.sql.{Encoders, Row}
+    import scala.jdk.CollectionConverters._
+    val spark = codes.sparkSession
+    val qs = queries.select(col("vec_id"), col("embedding")).collect()
+      .map(r => (r.getLong(0), r.getSeq[Float](1)))
+    val qids = qs.map(_._1)
+    require(qids.distinct.length == qids.length,
+      "ivfPqScore: query ids must be unique")
+    val dtables = qs.map { case (_, v) => adcTable(cbs, subDims)(v) }
+    // cell -> the indexes of the queries probing it
+    val byCell: Map[Int, Array[Int]] = qs.indices
+      .flatMap(qi => nearestCells(centroids, nProbe)(qs(qi)._2).map(_ -> qi))
+      .groupBy(_._1).map { case (c, xs) => c -> xs.map(_._2).toArray }
+    val width = k * refine
+    val byAdist = Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Long)
+    val partial =
+      if (byCell.isEmpty || width <= 0) Array.empty[(Int, Long, Double)]
+      else codes.filter(col("cell").isin(byCell.keys.toSeq.sorted: _*))
+        .select(col("vec_id").cast("long"), col("cell"), col("codes"))
+        .mapPartitions { (rows: Iterator[Row]) =>
+          // per query, the `width` best seen so far, worst on top
+          val best = Array.fill(qids.length)(
+            new java.util.PriorityQueue[(Double, Long)](width + 1,
+              byAdist.reverse))
+          rows.foreach { r =>
+            val vid = r.getLong(0)
+            val cs = r.getSeq[Int](2)
+            byCell.getOrElse(r.getInt(1), Array.empty[Int]).foreach { qi =>
+              if (vid != qids(qi)) {
+                val dt = dtables(qi)
+                var d = 0.0; var m = 0
+                while (m < cs.length) { d += dt(m)(cs(m)); m += 1 }
+                best(qi).add((roundHalfUp(d, 6), vid))
+                if (best(qi).size > width) best(qi).poll()
+              }
+            }
+          }
+          best.iterator.zipWithIndex.flatMap { case (h, qi) =>
+            h.asScala.map { case (a, vid) => (qi, vid, a) }
+          }
+        }(Encoders.tuple(Encoders.scalaInt, Encoders.scalaLong,
+          Encoders.scalaDouble))
+        .collect()
+    val cands = partial.groupBy(_._1).map { case (qi, xs) =>
+      qi -> xs.map(x => (x._3, x._2)).sorted(byAdist).take(width)
+    }
+    val ids = cands.values.flatten.map(_._2).toSeq.distinct.sorted
+    val raw: Map[Long, Array[Seq[Float]]] =
+      if (ids.isEmpty) Map.empty
+      else emb.filter(col("vec_id").isin(ids: _*))
+        .select(col("vec_id").cast("long"), col("embedding")).collect()
+        .groupBy(_.getLong(0)).map { case (id, rs) => id -> rs.map(_.getSeq[Float](1)) }
+    // cos DESC (a null cosine last, as Spark sorts it), neighbor_id ASC
+    val byCos: Ordering[(Option[Double], Long, Double)] = (x, y) => {
+      val c = (x._1, y._1) match {
+        case (Some(a), Some(b)) => java.lang.Double.compare(b, a)
+        case (Some(_), None) => -1
+        case (None, Some(_)) => 1
+        case _ => 0
       }
-      ds.sortBy(_._2).take(nProbe).map(_._1)
-    })
-    val dtables = pqDtables(queries, cbs, cbs.length, cbs.head.length, subDims)
-    val adistU = udf((codes: Seq[Int], qid: Long) => {
-      val dt = dtables(qid)
-      var s = 0.0; var m = 0
-      while (m < codes.length) { s += dt(m)(codes(m)); m += 1 }
-      s
-    })
-    val qcells = broadcast(queries
-      .select(col("vec_id").as("query_id"),
-        explode(probesU(col("embedding"))).as("cell")))
-    val wA = Window.partitionBy(col("query_id"))
-      .orderBy(col("adist").asc, col("vec_id"))
-    // a vector lives in exactly ONE cell, so the probe join is dup-free
-    val cand = codes.join(qcells, "cell")
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("adist", round(adistU(col("codes"), col("query_id")), 6))
-      .withColumn("ark", row_number().over(wA))
-      .filter(col("ark") <= k * refine)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"), col("adist"))
-    val e = withNorm(emb, "vec_id", "embedding")
-    val q = withNorm(queries, "vec_id", "embedding")
-      .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qn"))
-    val wC = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    cand.join(e.withColumnRenamed("vec_id", "neighbor_id"), "neighbor_id")
-      .join(broadcast(q), "query_id")
-      .withColumn("cos", round(dot(col("v"), col("qv")) / (col("nrm") * col("qn")), 4))
-      .withColumn("rk", row_number().over(wC))
-      .filter(col("rk") <= k)
-      .select(col("query_id"), col("rk"), col("neighbor_id"), col("adist"), col("cos"))
+      if (c != 0) c else java.lang.Long.compare(x._2, y._2)
+    }
+    val rows = qs.indices.flatMap { qi =>
+      val (qid, qv) = qs(qi)
+      cands.getOrElse(qi, Array.empty[(Double, Long)])
+        .flatMap { case (a, vid) =>
+          raw.getOrElse(vid, Array.empty[Seq[Float]])
+            .map(v => (cosine(v, qv), vid, a))
+        }
+        .sorted(byCos).take(k).zipWithIndex.map { case ((c, vid, a), i) =>
+          Row(qid, i + 1, vid, a, c.map(Double.box).orNull)
+        }
+    }
+    import org.apache.spark.sql.types._
+    spark.createDataFrame(rows.asJava, StructType(Seq(
+      StructField("query_id", LongType),
+      StructField("rk", IntegerType, nullable = false),
+      StructField("neighbor_id", LongType),
+      StructField("adist", DoubleType),
+      StructField("cos", DoubleType))))
   }
+
+  /** Spark's `round(x, s)` on a double: HALF_UP on the shortest decimal
+    * repr (`BigDecimal.valueOf`); NaN and infinities pass through. */
+  private[ops] def roundHalfUp(x: Double, s: Int): Double =
+    if (x.isNaN || x.isInfinite) x
+    else java.math.BigDecimal.valueOf(x)
+      .setScale(s, java.math.RoundingMode.HALF_UP).doubleValue
+
+  /** The engine's rounded cosine `round(dot(v, q) / (norm(v)·norm(q)), 4)`
+    * on the driver, with the left-to-right loops of
+    * [[graft.functions.ArrayDotProduct]] / `ArrayNormL2` over the
+    * float-to-double widened vectors. None where Spark's non-ANSI divide
+    * gives null (a zero norm) or the lengths differ. */
+  private[ops] def cosine(v: Seq[Float], q: Seq[Float]): Option[Double] =
+    if (v.length != q.length) None
+    else {
+      var dot = 0.0; var vv = 0.0; var qq = 0.0; var i = 0
+      while (i < v.length) {
+        val x = v(i).toDouble; val y = q(i).toDouble
+        dot += x * y; vv += x * x; qq += y * y
+        i += 1
+      }
+      val den = math.sqrt(vv) * math.sqrt(qq)
+      if (den == 0.0) None else Some(roundHalfUp(dot / den, 4))
+    }
 
   /** Symmetric int8 quantization of an embedding column — the storage
     * path that cuts a float32 vector store 4× (and pairs with the PQ

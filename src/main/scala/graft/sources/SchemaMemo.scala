@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameReader, SparkSession}
 import org.apache.spark.sql.types.StructType
 
 /** Process-level schema memo for the engine's own persisted artifacts
@@ -21,11 +21,24 @@ object SchemaMemo {
   /** Read parquet at `path` with the schema cached under `key`; first
     * call infers and remembers. `key` must uniquely determine the
     * schema — convention: "<layout-kind>@<layout-root>". */
-  def read(spark: SparkSession, key: String, path: String): DataFrame = {
+  def read(spark: SparkSession, key: String, path: String): DataFrame =
+    memoized(spark.read, key, Seq(path))
+
+  /** [[read]] over several directories of one partitioned layout rooted
+    * at `basePath`, so the partition columns are still read from the
+    * directory names. Listing only the given directories is what keeps
+    * a probe from paying a partition-discovery job over the whole
+    * layout. */
+  def readAll(spark: SparkSession, key: String, basePath: String,
+      paths: Seq[String]): DataFrame =
+    memoized(spark.read.option("basePath", basePath), key, paths)
+
+  private def memoized(reader: DataFrameReader, key: String,
+      paths: Seq[String]): DataFrame = {
     val s = memo.get(key)
-    if (s != null) spark.read.schema(s).parquet(path)
+    if (s != null) reader.schema(s).parquet(paths: _*)
     else {
-      val df = spark.read.parquet(path)
+      val df = reader.parquet(paths: _*)
       memo.putIfAbsent(key, df.schema)
       df
     }

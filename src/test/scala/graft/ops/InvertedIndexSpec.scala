@@ -5,9 +5,10 @@ import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
 /** Persisted inverted index: probe ≡ the from-scratch BM25 path
-  * row-for-row, static bucket pruning reaches the parquet partition
-  * filters, the driver-side bucket hash matches the engine expression,
-  * and the versioned publish lifecycle (rebuild, abort sweep) holds.
+  * row-for-row (also for query terms whose bucket was never written),
+  * the bucket filter reaches the parquet partition filters, the
+  * driver-side bucket hash matches the engine expression, and the
+  * versioned publish lifecycle (rebuild, abort sweep) holds.
   */
 class InvertedIndexSpec extends SparkSpecBase {
 
@@ -50,6 +51,51 @@ class InvertedIndexSpec extends SparkSpecBase {
     assert(plan.contains("PartitionFilters") &&
       plan.contains("term_bucket"),
       s"no partition filter on term_bucket in:\n$plan")
+  }
+
+  /** A 4-doc corpus writes only a few of the 64 bucket directories. */
+  private lazy val tiny = {
+    import spark.implicits._
+    Seq((1L, "the cat sat"), (2L, "a cat and a dog"), (3L, "dog days"),
+      (4L, "sat on the mat")).toDF("doc_id", "text")
+  }
+  private lazy val tinyIx = {
+    val ix = tmp()
+    InvertedIndex.save(tiny, "doc_id", "text", ix)
+    ix
+  }
+
+  /** Absent terms whose bucket directory was never written. */
+  private def absentTerms(n: Int): Seq[String] = {
+    val v = IndexVersioning.resolveDir(spark, tinyIx)
+    Iterator.from(0).map(i => s"zq$i")
+      .filter(t => !new java.io.File(
+        s"$v/postings/term_bucket=${InvertedIndex.bucketOf(t)}").exists)
+      .take(n).toSeq
+  }
+
+  private def typed(df: org.apache.spark.sql.DataFrame) =
+    df.schema.map(f => (f.name, f.dataType))
+
+  test("a term whose bucket directory does not exist is skipped, not PATH_NOT_FOUND") {
+    val terms = Seq("cat", "dog") ++ absentTerms(1)
+    val fromIndex = InvertedIndex.bm25TopK(spark, tinyIx, terms, k = 10)
+    val scratch = KeywordSearch.bm25TopK(tiny, "doc_id", "text", terms,
+      k = 10)
+    val got = fromIndex.collect().map(_.toSeq).toSeq
+    assert(got.nonEmpty)
+    assert(got.sortBy(_.toString) ===
+      scratch.collect().map(_.toSeq).toSeq.sortBy(_.toString))
+    assert(typed(fromIndex) === typed(scratch))
+  }
+
+  test("no queried bucket exists: an empty frame typed as bm25TopK's") {
+    val terms = absentTerms(2)
+    val fromIndex = InvertedIndex.bm25TopK(spark, tinyIx, terms, k = 10)
+    val scratch = KeywordSearch.bm25TopK(tiny, "doc_id", "text", terms,
+      k = 10)
+    assert(fromIndex.collect().isEmpty && scratch.collect().isEmpty)
+    assert(typed(fromIndex) === typed(scratch))
   }
 
   test("rebuilds version atomically; aborted build dirs are swept") {

@@ -109,6 +109,61 @@ class JobCountSpec extends SparkSpecBase {
     // staged metadata-scale mixture frame and its broadcast
     "q_corpus_mix_order" -> 21)
 
+  // The persisted-index calls of the serving path, each counted on a
+  // warm session (schemas and quantizers memoized, as a serving process
+  // probes) with the query frame local, as a serving request arrives.
+  // Measured 4 / 2 / 4; the window/broadcast-join probe tails and the
+  // distinct-and-broadcast upsert they replaced ran 7 / 5 / 12 here.
+  private def tmpDir(tag: String) =
+    java.nio.file.Files.createTempDirectory(tag).toString + "/ix"
+  private lazy val emb = graft.Tables.embeddings(spark, sfDir)
+  private def localVectors(ids: Seq[Long], idBase: Long) = {
+    import spark.implicits._
+    emb.filter(org.apache.spark.sql.functions.col("vec_id").isin(ids: _*))
+      .orderBy("vec_id").collect().zipWithIndex.toSeq
+      .map { case (r, i) => (idBase - i, r.getAs[Seq[Float]]("embedding").toArray) }
+      .toDF("vec_id", "embedding")
+  }
+  private def pin(label: String, bound: Int)(call: => Unit): Unit = {
+    call // warm
+    val n = graft.Profile.countJobsOf(spark, label)(call).jobs
+    info(s"$label: $n jobs")
+    assert(n > 0, s"$label launched no jobs — counter broken?")
+    assert(n <= bound, s"$label launched $n jobs (bound $bound)")
+  }
+
+  test("a BM25 index probe stays within 4 driver barriers") {
+    val ix = tmpDir("jobs-bm25")
+    graft.ops.InvertedIndex.save(graft.Tables.documents(spark, sfDir),
+      "doc_id", "text", ix)
+    pin("bm25-probe", 4) {
+      graft.ops.InvertedIndex.bm25TopK(spark, ix,
+        Seq("dup", "spark", "merge"), 10).collect()
+    }
+  }
+
+  test("an ANN index probe stays within 2 driver barriers") {
+    val ix = tmpDir("jobs-ann")
+    graft.ops.AnnIndex.save(emb, ix)
+    val query = localVectors(Seq(100L), -1L)
+    pin("ann-probe", 2) {
+      graft.ops.AnnIndex.topK(spark, ix, emb, query, 10).collect()
+    }
+  }
+
+  test("an 8-vector ANN index upsert stays within 7 driver barriers") {
+    val ix = tmpDir("jobs-upsert")
+    graft.ops.AnnIndex.save(emb, ix)
+    // new ids, copies of corpus vectors; built before the count
+    val batches = Iterator.from(1).map(b =>
+      localVectors((1L to 8L).map(_ * 10 + b), 1000000L * b)).take(2).toSeq
+    var next = 0
+    pin("ann-upsert", 7) {
+      graft.ops.AnnIndex.upsert(batches(next), ix)
+      next += 1
+    }
+  }
+
   bounds.foreach { case (name, bound) =>
     test(s"$name stays within $bound driver barriers on the fixture") {
       val n = countJobs(name)

@@ -53,6 +53,9 @@ gate_sf() { # sfdir outdir -> "match fail err"
   SPARK_GRAFT_CPUS="$CPUS" sbt -batch "runMain graft.Verify $SF $OUT" \
     >/dev/null 2>&1
   python3 tools/verify_local.py "$SF" "$OUT" >"$LOG" 2>&1 || true
+  # the compare's timing lines, so a slow oracle can be named from the
+  # close-out output (stderr: stdout carries only the counts)
+  grep -E "^\[time\]" "$LOG" | sed "s|^|$(basename "$SF"): |" >&2 || true
   local M F
   M=$(grep -c ": MATCH\|: ROWS_ONLY" "$LOG" || true)
   F=$(grep -cE "^\[FAIL|FAIL\]" "$LOG" || true)
