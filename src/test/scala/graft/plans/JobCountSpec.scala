@@ -112,7 +112,7 @@ class JobCountSpec extends SparkSpecBase {
   // The persisted-index calls of the serving path, each counted on a
   // warm session (schemas and quantizers memoized, as a serving process
   // probes) with the query frame local, as a serving request arrives.
-  // Measured 4 / 2 / 4; the window/broadcast-join probe tails and the
+  // Measured 4 / 2 / 5; the window/broadcast-join probe tails and the
   // distinct-and-broadcast upsert they replaced ran 7 / 5 / 12 here.
   private def tmpDir(tag: String) =
     java.nio.file.Files.createTempDirectory(tag).toString + "/ix"
