@@ -34,8 +34,8 @@ import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdat
   *    list, `<outDir>/<q>_<suffix>.txt` per query.
   *
   * `sfDir` defaults to `$SPARK_GRAFT_SF_DIR`, else sf0.1. `PLANS.md` is
-  * generated at sf0.001 on 4 cores (as the `Verify` gate runs), every
-  * other mode on 32 cores; `SPARK_GRAFT_CPUS` overrides either. Results
+  * generated at sf0.001 on 4 cores (`Verify`'s default core count),
+  * every other mode on 32 cores; `SPARK_GRAFT_CPUS` overrides either. Results
   * go to stdout as one JSON line each. */
 object Profile {
 
@@ -139,9 +139,8 @@ object Profile {
     * work on a shared session is not counted: jobs and SQL executions
     * started from this thread carry the group id, and AQE's stage
     * materializations inherit it (Spark copies the submitting thread's
-    * local properties into them). The listener bus is async, so the
-    * counters are read once they are stable for three consecutive
-    * 200 ms windows, which a fixed sleep undercounts on a loaded host. */
+    * local properties into them). The counters are read through
+    * [[awaitStable]]. */
   def countJobsOf(spark: SparkSession, label: String)(body: => Unit)
       : JobCount = {
     val group = s"graft-jobcount-$label"
@@ -176,13 +175,7 @@ object Profile {
     spark.sparkContext.setJobGroup(group, null)
     try {
       body
-      var stable = 0
-      var last = (-1, -1)
-      while (stable < 3) {
-        Thread.sleep(200)
-        val now = (jobs.get(), ends.size)
-        if (now == last) stable += 1 else { stable = 0; last = now }
-      }
+      val (nJobs, _) = awaitStable((jobs.get(), ends.size))
       def nodes(p: SparkPlanInfo): Seq[String] =
         p.nodeName +: p.children.flatMap(nodes)
       val executions = starts.asScala.toSeq.sortBy(_._1).map { case (id, st) =>
@@ -194,11 +187,25 @@ object Profile {
           names.count(_ == "BroadcastQueryStage"),
           names.count(n => n == "ReusedExchange" || n == "TableCacheQueryStage"))
       }
-      JobCount(label, last._1, executions)
+      JobCount(label, nJobs, executions)
     } finally {
       spark.sparkContext.clearJobGroup()
       spark.sparkContext.removeSparkListener(listener)
     }
+  }
+
+  /** Flush an async listener: poll `read` until it returns the same
+    * value for three consecutive 200 ms windows (a fixed sleep
+    * undercounts on a loaded host), and return that value. */
+  def awaitStable[T](read: => T): T = {
+    var stable = 0
+    var last: Option[T] = None
+    while (stable < 3) {
+      Thread.sleep(200)
+      val now = Some(read)
+      if (now == last) stable += 1 else { stable = 0; last = now }
+    }
+    last.get
   }
 
   /** One cold run, then `steadyS` (seconds) of the steady reps. */

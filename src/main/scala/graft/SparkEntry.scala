@@ -42,12 +42,11 @@ object SparkEntry {
     modules.flatMap(_.queries).toMap.map { case (name, fn) =>
       name -> { (spark: SparkSession, dir: String) =>
         graft.functions.GraftFunctions.install(spark)
-        // query boundary = staged-frame sweep: every stage/
-        // stageTransient frame of the PREVIOUS query is dead by now
-        // (its action completed), so free the blocks before this query
-        // computes instead of letting ~100 queries'
-        // staged frames pile onto the storage pool over a bench/gate
-        // run (measured: late-suite queries 2-3× inflated)
+        // query boundary = staged-frame sweep: every staged frame of
+        // the PREVIOUS query is dead by now (its action completed), so
+        // free the blocks before this query computes instead of letting
+        // ~100 queries' staged frames pile onto the storage pool over a
+        // bench/gate run (measured: late-suite queries 2-3× inflated)
         graft.ops.Checkpoints.releaseTransients()
         fn(spark, dir)
       }

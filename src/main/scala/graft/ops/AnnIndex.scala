@@ -36,20 +36,10 @@ object AnnIndex {
   private[graft] def resolveDir(spark: SparkSession, dir: String): String =
     IndexVersioning.resolveDir(spark, dir)
 
-  /** The layout ROOT a version dir belongs to — the schema-memo key
-    * component: every `v_<n>` under one root shares the writer's fixed
-    * per-part schema, so the footer-read inference (~60-90 ms per
-    * `read.parquet`) is paid once per root, not once per version per
-    * probe ([[graft.sources.SchemaMemo]]). */
-  private def layoutRoot(dir: String): String = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    if (p.getName.matches("v_\\d+")) p.getParent.toString else dir
-  }
-
   private def readPart(spark: SparkSession, vdir: String, part: String,
       path: String): DataFrame =
     graft.sources.SchemaMemo.read(spark,
-      s"ann.$part@${layoutRoot(vdir)}", path)
+      s"ann.$part@${IndexVersioning.layoutRoot(vdir)}", path)
 
   /** Build the index from `emb` (vec_id, embedding) and persist it
     * under `dir`. Rebuild-while-serving safe: each build writes into a
@@ -288,9 +278,10 @@ object AnnIndex {
       Similarity.nearestCells(centroids, nProbe)(v))
     // the delta's normed+assigned frame feeds both self-join sides and
     // the final projection — compute-once, single-plan consumer shape
-    val dd = Checkpoints.stageTransient(
+    val dd = Checkpoints.stage(
       Similarity.withNorm(delta, "vec_id", "embedding")
-        .withColumn("cell", assignU(col("v").cast("array<float>"))))
+        .withColumn("cell", assignU(col("v").cast("array<float>"))),
+      eager = true)
     val aSide = dd
       .select(col("vec_id"), col("v").as("av"), col("nrm").as("an"),
         explode(probesU(col("v").cast("array<float>"))).as("cell"))

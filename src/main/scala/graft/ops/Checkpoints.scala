@@ -1,6 +1,6 @@
 package graft.ops
 
-import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
+import java.util.concurrent.ConcurrentLinkedQueue
 
 import org.apache.spark.sql.DataFrame
 
@@ -30,22 +30,18 @@ import org.apache.spark.sql.DataFrame
   * (same hash either way — this seam changes fault-tolerance, never
   * results).
   *
-  * Staged storage has three lifetimes, one per kind of frame:
+  * Staged storage has two lifetimes:
   *
   * Truncated frames ([[stage]], [[stageObserved]]) are the only copy of
   * their data: a read after their blocks are freed fails instead of
   * recomputing. They are freed by [[release]] (a loop's dead
   * predecessor) or at the query boundary by [[releaseTransients]], which
   * SparkEntry calls before each registered query's construction —
-  * never by another call's sweep, on any thread. A driver that never
-  * reaches a query boundary (a batch loop such as perfbench's refresh
-  * cycle) holds its truncated frames until it calls
+  * never by another call's sweep, on any thread. Every consumer of a
+  * staged frame must therefore run before the next boundary. A driver
+  * that never reaches a query boundary (a batch loop such as
+  * perfbench's refresh cycle) holds its truncated frames until it calls
   * [[releaseTransients]] itself.
-  *
-  * [[stageTransient]] frames keep their lineage, so freeing them early
-  * only costs a recompute. They are freed by the next [[stageTransient]]
-  * call on the same thread (a thread that has exited is drained by any
-  * later call), or at the boundary by [[releaseTransients]].
   *
   * Reliable-mode lazy caches (the persisted input of a lazy reliable
   * [[stage]], read by its deferred checkpoint write) are freed by
@@ -97,9 +93,10 @@ object Checkpoints {
     }
   }
 
-  /** Spec surface: how many lazy-stage caches still await their
-    * deferred checkpoint (post-sweep count pins the no-leak claim). */
-  private[graft] def pendingCount: Int = { sweep(); pendingUnpersist.size() }
+  /** How many reliable-mode lazy-stage caches still await their
+    * deferred checkpoint, after a sweep (the no-leak count that specs
+    * pin and perfbench reports). */
+  private[graft] def transientCount: Int = { sweep(); pendingUnpersist.size() }
 
   /** Free a staged frame's blocks NOW instead of waiting for
     * ContextCleaner's PERIODIC cycle (spark.cleaner.periodicGC.interval,
@@ -133,53 +130,6 @@ object Checkpoints {
     staged.head.unpersist(blocking = false)
   }
 
-  /** [[stageTransient]] frames awaiting release, queued PER OWNING
-    * THREAD: a thread's call sweeps only its own prior frames, so a
-    * concurrent pipeline's still-pending frame is never evicted (a
-    * silent recompute of the corpus-scale scan the staging exists to
-    * avoid). */
-  private val transientQueues =
-    new ConcurrentHashMap[Thread, ConcurrentLinkedQueue[DataFrame]]()
-
-  private def drain(q: ConcurrentLinkedQueue[DataFrame]): Unit = {
-    var f = q.poll()
-    while (f != null) { f.unpersist(blocking = false); f = q.poll() }
-  }
-
-  /** Stage a compute-once/consume-within-ONE-plan frame (TF-IDF's tf
-    * partials, unigramNll's vocab) with DETERMINISTIC release instead of
-    * the wait-for-the-periodic-cleaner convention, under which each
-    * single-shot call held one MEMORY_AND_DISK frame for up to 30 min.
-    *
-    * Unlike [[stage]], lineage is NOT truncated: the frame is persisted
-    * and eagerly materialized (one job computes it once; every scan in
-    * the consuming plan reads the cache), so releasing its blocks is
-    * safe at ANY time — a later action simply recomputes from lineage
-    * instead of failing on vanished checkpoint blocks. That safety is
-    * what lets each call sweep the calling thread's prior transient
-    * frames, and the queues of threads that have exited: their
-    * consumers have run by then in every registered-query flow, and a
-    * plan still unmaterialized when its input is swept degrades to a
-    * recompute, never to wrong results. Iterative operators must keep
-    * using [[stage]]: their loop rounds need lineage truncation, and
-    * their predecessors are provably dead — the stronger [[release]]
-    * applies there. */
-  def stageTransient(df: DataFrame): DataFrame = {
-    val own = transientQueues.computeIfAbsent(Thread.currentThread(),
-      _ => new ConcurrentLinkedQueue[DataFrame]())
-    drain(own)
-    val it = transientQueues.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (!e.getKey.isAlive) { drain(e.getValue); it.remove() }
-    }
-    val cached = df.persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    cached.count() // materialize NOW: one computation feeds all consumers
-    own.add(cached)
-    cached
-  }
-
   /** Every [[stage]]/[[stageObserved]] frame awaiting the query-boundary
     * sweep, from every thread: the frames that survive an operator (a
     * staged edge list, a loop's lazy final, a query-internal shared
@@ -190,29 +140,20 @@ object Checkpoints {
     * [[release]] is a no-op (RDD.unpersist is idempotent). */
   private val stagedFrames = new ConcurrentLinkedQueue[DataFrame]()
 
-  /** Query boundary: release every outstanding transient AND staged
-    * frame now, across ALL threads (idempotent). SparkEntry calls this
-    * before each registered query's construction; batch drivers call it
-    * at their loop boundary. Contract: every consumer of a staged frame
-    * runs before the next boundary — true by construction for the
-    * registered queries, which compute from the parquet inputs and share
-    * nothing staged across queries. */
+  /** Query boundary: release every outstanding staged frame now,
+    * across ALL threads (idempotent). SparkEntry calls this before each
+    * registered query's construction; batch drivers call it at their
+    * loop boundary. Contract: every consumer of a staged frame runs
+    * before the next boundary — true by construction for the registered
+    * queries, which compute from the parquet inputs and share nothing
+    * staged across queries. */
   def releaseTransients(): Unit = {
-    val it = transientQueues.values().iterator()
-    while (it.hasNext) { drain(it.next()); it.remove() }
     var f = stagedFrames.poll()
     while (f != null) { release(f); f = stagedFrames.poll() }
   }
 
   /** Spec surface: outstanding staged frames across all threads. */
   private[graft] def stagedCount: Int = stagedFrames.size()
-
-  /** Spec surface: outstanding transient frames across all threads. */
-  private[graft] def transientCount: Int = {
-    var n = 0
-    transientQueues.values().forEach(q => n += q.size())
-    n
-  }
 
   /** Conf keys the loop-compile clone re-syncs from the parent on
     * every keepPartitioning stage: the seam's own routing key (reliable
@@ -257,7 +198,8 @@ object Checkpoints {
     * materializes on first action (construction-time staging of plan-only
     * consumers stays free — the PlanGuard constraint), `eager=true`
     * materializes now (iteration loops, where the frame is consumed
-    * immediately and repeatedly).
+    * immediately and repeatedly, and compute-once frames that feed
+    * several consumers in one plan).
     *
     * `keepPartitioning=true` compiles THIS staging without AQE so the
     * staged frame's hash partitioning AND ordering survive into the

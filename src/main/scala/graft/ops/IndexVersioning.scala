@@ -50,6 +50,16 @@ object IndexVersioning {
     committedVersions(spark, dir).lastOption
       .map(v => s"$dir/v_$v").getOrElse(dir)
 
+  /** The layout ROOT a build dir belongs to: the parent of a `v_<n>`
+    * dir, else `dir` itself (the flat layout). Every version under one
+    * root shares the writer's fixed per-part schema, so readers key
+    * [[graft.sources.SchemaMemo]] by it and pay the footer-read
+    * inference once per root, not once per version per probe. */
+  def layoutRoot(dir: String): String = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    if (p.getName.matches("v_\\d+")) p.getParent.toString else dir
+  }
+
   /** Marker file: this build LAYERS on a base version (cell-level
     * upsert — AnnIndex.upsert writes only the touched cell partitions
     * and chains the untouched ones). Content: the base version number

@@ -87,10 +87,7 @@ object InvertedIndex {
     val v = IndexVersioning.resolveDir(spark, dir)
     // schema-memo reads (keyed by layout root): the versioned layout
     // re-infers fixed writer schemas on every fresh v_<n> otherwise
-    val root = {
-      val p = new org.apache.hadoop.fs.Path(v)
-      if (p.getName.matches("v_\\d+")) p.getParent.toString else v
-    }
+    val root = IndexVersioning.layoutRoot(v)
     val stats = graft.sources.SchemaMemo
       .read(spark, s"invidx.stats@$root", s"$v/stats").head()
     val postings = s"$v/postings"

@@ -71,11 +71,10 @@ object KeywordSearch {
     // tokens — a frame orders of magnitude narrower than the text.
     // Staged because it feeds the corpus stats, the tf table, and
     // (via tf) the scoring join; without it the text would be re-read
-    // and re-tokenized for each consumer. Transient (deterministic
-    // release — the r12 #5 convention sweep).
-    val base = Checkpoints.stageTransient(
+    // and re-tokenized for each consumer.
+    val base = Checkpoints.stage(
       docs.select(col(idCol), size(toksArr).as("dl"),
-        filter(toksArr, t => t.isin(termList: _*)).as("ts")))
+        filter(toksArr, t => t.isin(termList: _*)).as("ts")), eager = true)
     // 1-row corpus stats, read once as driver constants: N and avgdl
     // (exact integer sum / count)
     val stats = base.agg(count(lit(1)).as("n_docs"),
@@ -166,10 +165,8 @@ object KeywordSearch {
       .agg(count(lit(1)).as("tf"))
     // tf rows are distinct per (doc, term), so df is a plain count —
     // and it feeds the scoring join, so stage it: one tf computation,
-    // not two. Transient staging (persist, not checkpoint) so the
-    // blocks release deterministically instead of leaking to the
-    // periodic cleaner (r12 VERDICT #5).
-    val tfS = Checkpoints.stageTransient(tf)
+    // not two.
+    val tfS = Checkpoints.stage(tf, eager = true)
     val dfsRaw = tfS.groupBy(col("term")).agg(count(lit(1)).as("df"))
     val dfs = if (broadcastDf) broadcast(dfsRaw) else dfsRaw
     val nDocs = docs.agg(count(lit(1)).as("n_docs"))
@@ -181,9 +178,6 @@ object KeywordSearch {
         ln9((col("n_docs") + 1).cast("double") / (col("df") + 1)))
       .withColumn("score",
         round(col("tf").cast("double") * col("idf") / col("dl"), 6))
-    // tfS is swept by the next stageTransient call (or an explicit
-    // Checkpoints.releaseTransients) — lineage is intact, so an early
-    // sweep costs a recompute, never a failed read.
     scored.withColumn("rk", row_number().over(w).cast("long"))
       .filter(col("rk") <= k)
       .select(col(idCol), col("rk"), col("term"), col("tf"), col("df"),
@@ -239,14 +233,15 @@ object KeywordSearch {
       .select(col(idCol), explode(pairsArr).as("p"))
       .select(col(idCol), col("p.prev").as("prev"), col("p.cur").as("cur"))
     // bigram table with its context marginal; ln terms pre-rounded.
-    // Transient staging: one computation, deterministic release.
-    val table = Checkpoints.stageTransient(
+    // Staged: one computation feeds the join.
+    val table = Checkpoints.stage(
       docPairs.groupBy(col("prev"), col("cur"))
         .agg(count(lit(1)).as("c2"))
         .withColumn("c1", sum(col("c2"))
           .over(org.apache.spark.sql.expressions.Window.partitionBy(col("prev"))))
         .withColumn("term",
-          (ln9(col("c1")) - ln9(col("c2"))).cast("decimal(28,12)")))
+          (ln9(col("c1")) - ln9(col("c2"))).cast("decimal(28,12)")),
+      eager = true)
     val t = if (broadcastVocab) broadcast(table) else table
     docPairs.join(t, Seq("prev", "cur"))
       .groupBy(col(idCol))
@@ -317,12 +312,11 @@ object KeywordSearch {
       isTarget: Column, broadcastVocab: Boolean = true): DataFrame = {
     val words = docs.select(col(idCol), isTarget.as("_t"),
       explode(toks(col(textCol))).as("word"))
-    // one pass: raw count and target count per word; transient staging
-    // (deterministic release)
-    val vocabRaw = Checkpoints.stageTransient(
+    // one pass: raw count and target count per word, staged
+    val vocabRaw = Checkpoints.stage(
       words.groupBy(col("word"))
         .agg(count(lit(1)).as("cr"),
-          sum(when(col("_t"), 1L).otherwise(0L)).as("ct")))
+          sum(when(col("_t"), 1L).otherwise(0L)).as("ct")), eager = true)
     val tots = vocabRaw.agg(sum(col("cr")).as("tot_r"),
       sum(col("ct")).as("tot_t"), count(lit(1)).as("v"))
     val terms = vocabRaw.crossJoin(broadcast(tots))
@@ -356,10 +350,11 @@ object KeywordSearch {
   def unigramNll(docs: DataFrame, idCol: String, textCol: String,
       broadcastVocab: Boolean = true): DataFrame = {
     // vocab feeds the token join AND the total; staged = one corpus
-    // explode, not two. Transient (deterministic release — r12 #5).
-    val vocabRaw = Checkpoints.stageTransient(
+    // explode, not two.
+    val vocabRaw = Checkpoints.stage(
       unigramCounts(docs, textCol)
-        .withColumn("lncnt", ln9(col("cnt")).cast("decimal(28,12)")))
+        .withColumn("lncnt", ln9(col("cnt")).cast("decimal(28,12)")),
+      eager = true)
     val vocab = if (broadcastVocab) broadcast(vocabRaw) else vocabRaw
     val total = vocabRaw.agg(sum(col("cnt")).as("total"))
     val words = docs.select(col(idCol), explode(toks(col(textCol))).as("word"))
@@ -398,10 +393,10 @@ object KeywordSearch {
       eta: Double, steps: Int, broadcastVocab: Boolean = true): DataFrame = {
     val words = docs.select(col(stratumCol).as("_d"),
       explode(toks(col(textCol))).as("word"))
-    // the only corpus-scale shuffle; staged once (transient —
-    // deterministic release), feeds both rollups
-    val dw = Checkpoints.stageTransient(
-      words.groupBy(col("_d"), col("word")).agg(count(lit(1)).as("dcnt")))
+    // the only corpus-scale shuffle; staged once, feeds both rollups
+    val dw = Checkpoints.stage(
+      words.groupBy(col("_d"), col("word")).agg(count(lit(1)).as("dcnt")),
+      eager = true)
     val globalRaw = dw.groupBy(col("word")).agg(sum(col("dcnt")).as("gcnt"))
     val global = if (broadcastVocab) broadcast(globalRaw) else globalRaw
     val gtot = dw.agg(sum(col("dcnt")).as("gtot"))

@@ -899,7 +899,7 @@ object Similarity {
   private[ops] def pqSub(subDims: Int)(v: IndexedSeq[Double], m: Int): Array[Double] =
     Array.tabulate(subDims)(d => v(m * subDims + d))
 
-  private[ops] def pqD2(a: IndexedSeq[Double], b: IndexedSeq[Double]): Double = {
+  private[ops] def pqD2(a: Array[Double], b: Array[Double]): Double = {
     var s = 0.0; var i = 0
     while (i < a.length) { val x = a(i) - b(i); s += x * x; i += 1 }
     s

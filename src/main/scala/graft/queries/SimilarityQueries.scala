@@ -33,17 +33,10 @@ object SimilarityQueries extends QueryModule {
     * the reduction that lets the whole cosine ANN stack serve
     * inner-product retrieval. */
   def knnMips(spark: SparkSession, dir: String): DataFrame =
-    knnMipsScale(spark, dir).transform(orderedSmall(_, col("query_id")))
-
-  /** The MIPS operator frame BEFORE the orderedSmall staging boundary —
-    * the plan-guard seam: orderedSmall's lazy localCheckpoint truncates
-    * the registered plan at a LogicalRDD, so PlanGuardSpec walks THIS
-    * subtree for the probe-set-broadcast shape it polices (the r14
-    * staging landed without moving the guard; the suite was red at the
-    * r15 handoff — fixed here). */
-  private[graft] def knnMipsScale(spark: SparkSession, dir: String): DataFrame =
-    Similarity.mipsRecall(Tables.embeddings(spark, dir),
-      queryVecs(spark, dir), K)
+    orderedSmall(
+      Similarity.mipsRecall(Tables.embeddings(spark, dir),
+        queryVecs(spark, dir), K),
+      col("query_id"))
 
   /** LSH-bucketed approximate top-5 (8 hyperplanes → 256 buckets). */
   def knnLsh(spark: SparkSession, dir: String): DataFrame =
@@ -62,13 +55,10 @@ object SimilarityQueries extends QueryModule {
   /** Product-quantization ADC top-5 (8 subspaces × 16 codes — vectors
     * compressed 32×, queries scan the code table only). */
   def knnPq(spark: SparkSession, dir: String): DataFrame =
-    orderedSmall(knnPqScale(spark, dir), col("query_id"), col("rk"))
-
-  /** The PQ operator frame before the orderedSmall staging boundary —
-    * plan-guard seam (see [[knnMipsScale]]). */
-  private[graft] def knnPqScale(spark: SparkSession, dir: String): DataFrame =
-    Similarity.pqTopK(
-      Tables.embeddings(spark, dir), queryVecs(spark, dir), K)
+    orderedSmall(
+      Similarity.pqTopK(
+        Tables.embeddings(spark, dir), queryVecs(spark, dir), K),
+      col("query_id"), col("rk"))
 
   /** Embedding near-dup candidate pairs at cosine ≥ 0.35: CORPUS-ADAPTIVE
     * LSH-bucketed candidates, exact-verified — the scale path (no
@@ -84,15 +74,11 @@ object SimilarityQueries extends QueryModule {
     * embedding tables stop at 2000 rows, so b=6..7 legs are generated
     * but exercised only by corpora above 4,096 vectors). */
   def cosinePairs(spark: SparkSession, dir: String): DataFrame =
-    orderedSmall(cosinePairsScale(spark, dir), col("vec_a"), col("vec_b"))
-
-  /** The adaptive pair generator BEFORE the orderedSmall staging
-    * boundary — the plan-guard seam (see [[knnMipsScale]]): the ids-only
-    * candidate-exchange property is asserted on THIS subtree, which the
-    * registered plan truncates at the staged LogicalRDD. */
-  private[graft] def cosinePairsScale(spark: SparkSession, dir: String): DataFrame =
-    Similarity.cosinePairsAdaptive(Tables.embeddings(spark, dir), Threshold,
-      targetOccupancy = Occupancy, targetRecall = Recall, maxPlanes = MaxB)
+    orderedSmall(
+      Similarity.cosinePairsAdaptive(Tables.embeddings(spark, dir),
+        Threshold, targetOccupancy = Occupancy, targetRecall = Recall,
+        maxPlanes = MaxB),
+      col("vec_a"), col("vec_b"))
 
   private val Threshold = 0.35
   private val Occupancy = 64

@@ -217,8 +217,7 @@ object AnnIndexSpec {
       .map { r =>
         val qv = r.getSeq[Float](1).map(_.toDouble).toIndexedSeq
         r.getLong(0) -> Array.tabulate(cbs.length, cbs.head.length)((m, c) =>
-          Similarity.pqD2(cbs(m)(c).toIndexedSeq,
-            Similarity.pqSub(subDims)(qv, m).toIndexedSeq))
+          Similarity.pqD2(cbs(m)(c), Similarity.pqSub(subDims)(qv, m)))
       }.toMap
     val adistU = udf((cs: Seq[Int], qid: Long) => {
       val dt = dtables(qid)

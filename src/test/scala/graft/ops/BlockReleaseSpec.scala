@@ -83,9 +83,10 @@ class BlockReleaseSpec extends SparkSpecBase {
   test("repeated TF-IDF / NLL calls hold a flat persistent-RDD count") {
     // r12 VERDICT #5: tfidfTopK/unigramNll staged their partials and
     // left release to the periodic cleaner — one leaked frame per call
-    // in a long-lived session. stageTransient sweeps prior frames on
-    // every call (safe: lineage preserved, an early sweep recomputes),
-    // and releaseTransients() is the deterministic loop-boundary zero.
+    // in a long-lived session. Their staged frames follow the one
+    // staging rule: each boundary (releaseTransients) frees every frame
+    // the calls before it staged, so the count is back to its baseline
+    // after every round, however many calls a session makes.
     val docs = Seq(
       (1L, "alpha beta gamma alpha"),
       (2L, "beta gamma delta"),
@@ -93,46 +94,16 @@ class BlockReleaseSpec extends SparkSpecBase {
       .toDF("doc_id", "text")
     Checkpoints.releaseTransients()
     val before = persisted
-    (1 to 5).foreach { _ =>
+    (1 to 5).foreach { i =>
       assert(KeywordSearch.tfidfTopK(docs, "doc_id", "text", k = 2).count() > 0)
       assert(KeywordSearch.unigramNll(docs, "doc_id", "text").count() > 0)
+      assert(Checkpoints.stagedCount >= 2,
+        "each call's staged frame waits for the boundary")
+      Checkpoints.releaseTransients()
+      assert((persisted -- before).isEmpty,
+        s"round $i: releaseTransients must free every staged frame")
+      assert(Checkpoints.stagedCount === 0)
     }
-    val fresh = persisted -- before
-    assert(fresh.size <= 1,
-      s"transient staging leaked: ${fresh.size} new persistent RDDs after " +
-        "10 calls (expected <= 1: only the most recent call's frame)")
-    Checkpoints.releaseTransients()
-    assert((persisted -- before).isEmpty,
-      "releaseTransients must free the last outstanding transient frame")
-    assert(Checkpoints.transientCount === 0)
-  }
-
-  test("transient queues are per-thread: another thread's sweep cannot evict mine") {
-    // r13 ADVICE: the JVM-global queue let one pipeline's stageTransient
-    // evict another thread's still-pending frame — silent recompute of
-    // the very scan the staging avoids. Now each thread sweeps only its
-    // own; a dead thread's leftovers reap on the next call anywhere.
-    Checkpoints.releaseTransients()
-    val mine = Checkpoints.stageTransient(Seq((1L, "x")).toDF("id", "s"))
-    var otherFailed: Option[Throwable] = None
-    val t = new Thread(() => {
-      try {
-        Checkpoints.stageTransient(Seq((2L, "y")).toDF("id", "s"))
-        Checkpoints.stageTransient(Seq((3L, "z")).toDF("id", "s"))
-      } catch { case e: Throwable => otherFailed = Some(e) }
-    })
-    t.start(); t.join()
-    assert(otherFailed.isEmpty, s"worker thread failed: $otherFailed")
-    assert(mine.storageLevel.useMemory,
-      "my pending transient frame must survive another thread's sweeps")
-    // my own next call sweeps my frame AND reaps the dead thread's queue
-    Checkpoints.stageTransient(Seq((4L, "w")).toDF("id", "s"))
-    assert(!mine.storageLevel.useMemory,
-      "my own next stageTransient sweeps my prior frame")
-    assert(Checkpoints.transientCount === 1,
-      "only the newest frame outstanding after the dead-thread reap")
-    Checkpoints.releaseTransients()
-    assert(Checkpoints.transientCount === 0)
   }
 
   test("lazy stage() frames chain and are freed only at the boundary") {
@@ -167,11 +138,11 @@ class BlockReleaseSpec extends SparkSpecBase {
       "the boundary sweep must free the staged blocks themselves")
   }
 
-  test("an upsert result stays readable after a later stageTransient on the same thread") {
+  test("an upsert result stays readable after a later tfidfTopK on the same thread") {
     // the refresh composition: MasterUpsert stages its survivors with
     // truncated lineage, and a KeywordSearch call on the same thread
-    // stages (and sweeps) its own transients before the upsert result is
-    // read — the sweep must not reach the upsert's staged frame
+    // stages its own frames before the upsert result is read — no
+    // staging call frees another's frame, only the boundary does
     Checkpoints.releaseTransients()
     val key = Seq("document_source", "document_type", "document_name")
     val master = Seq((1L, "s", "t", "a"), (2L, "s", "t", "b"))
@@ -185,17 +156,6 @@ class BlockReleaseSpec extends SparkSpecBase {
       "text", k = 1)
     assert(out.count() === 3)
     Checkpoints.releaseTransients()
-  }
-
-  test("a swept transient frame recomputes instead of failing") {
-    // the safety property that allows aggressive sweeping: lineage is
-    // preserved, so consuming a released transient frame degrades to a
-    // recompute, never to a vanished-block failure
-    val out = KeywordSearch.tfidfTopK(
-      Seq((1L, "a b c"), (2L, "b c d")).toDF("doc_id", "text"), "doc_id",
-      "text", k = 1)
-    Checkpoints.releaseTransients() // sweep BEFORE the plan materializes
-    assert(out.count() === 2)
   }
 
   test("MMR selection holds a bounded staged-frame count, not one per pick") {

@@ -90,8 +90,8 @@ class ReliableCheckpointSpec extends SparkSpecBase {
       Graph.clusterRepresentatives(vertices, "id", pairs, "id_a", "id_b")
         .write.format("noop").mode("overwrite").save()
       // the sink action materialized the final lazy stage's deferred
-      // checkpoint; pendingCount sweeps and must find nothing left
-      assert(Checkpoints.pendingCount === 0,
+      // checkpoint; transientCount sweeps and must find nothing left
+      assert(Checkpoints.transientCount === 0,
         "lazy-stage caches still pending after their checkpoints landed")
       val leaked = spark.sparkContext.getPersistentRDDs
         .filterNot { case (id, _) => before(id) }
@@ -113,7 +113,7 @@ class ReliableCheckpointSpec extends SparkSpecBase {
       (1 to 40).foreach { i =>
         Checkpoints.stage((1L to 5L).toDF(s"v$i"), eager = false)
       }
-      assert(Checkpoints.pendingCount <= 32,
+      assert(Checkpoints.transientCount <= 32,
         "pending lazy-stage caches grew past the documented bound")
     } finally spark.conf.unset(Checkpoints.DirKey)
   }

@@ -10,8 +10,39 @@ import org.apache.spark.sql.execution.SparkPlan
   */
 class PlanGuardSpec extends SparkSpecBase {
 
-  private def planOf(name: String): SparkPlan =
-    graft.SparkEntry.queries(name)(spark, sfDir).queryExecution.executedPlan
+  /** A registered query's physical plans: its registered plan first, then
+    * every plan executed while it was constructed. Each
+    * `Checkpoints.stage` call runs as a `localCheckpoint` execution and
+    * leaves only a LogicalRDD in the registered plan, so the staged
+    * subtrees are checked as they were executed. They are captured with
+    * a QueryExecutionListener, flushed with `Profile.awaitStable` (the
+    * listener bus is async), and memoized so every sweep reads one
+    * construction per query. */
+  private val plansMemo =
+    scala.collection.mutable.Map.empty[String, Seq[SparkPlan]]
+
+  private def plansOf(name: String): Seq[SparkPlan] =
+    plansMemo.getOrElseUpdate(name, {
+      import org.apache.spark.sql.execution.QueryExecution
+      import org.apache.spark.sql.util.QueryExecutionListener
+      val captured =
+        new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+      val listener = new QueryExecutionListener {
+        override def onSuccess(funcName: String, qe: QueryExecution,
+            durationNs: Long): Unit = captured.add(qe.executedPlan)
+        override def onFailure(funcName: String, qe: QueryExecution,
+            exception: Exception): Unit = ()
+      }
+      spark.listenerManager.register(listener)
+      try {
+        val registered = graft.SparkEntry.queries(name)(spark, sfDir)
+          .queryExecution.executedPlan
+        graft.Profile.awaitStable(captured.size)
+        registered +: captured.toArray(Array.empty[SparkPlan]).toSeq
+      } finally spark.listenerManager.unregister(listener)
+    })
+
+  private def planOf(name: String): SparkPlan = plansOf(name).head
 
   private def nodes(p: SparkPlan): Seq[SparkPlan] = {
     val kids = p match {
@@ -26,22 +57,28 @@ class PlanGuardSpec extends SparkSpecBase {
   private def names(name: String): Seq[String] =
     nodes(planOf(name)).map(_.nodeName)
 
+  /** Every node of the registered plan and of its staged plans. */
+  private def allNodes(name: String): Seq[SparkPlan] =
+    plansOf(name).flatMap(nodes)
+
   // ---- default-deny cartesian/unbounded-broadcast sweep -------------------
   //
-  // EVERY registered query's physical plan is walked; a CartesianProduct
-  // anywhere, or a BroadcastNestedLoopJoin whose broadcast side is not
-  // structurally bounded, fails unless the query carries a labeled
-  // allowlist entry below. A future query that accidentally composes a
-  // cross join therefore cannot ship unguarded (the r7 review's ask:
-  // the clean plan audit as an invariant, not a point-in-time fact).
+  // EVERY registered query's physical plans are walked — the registered
+  // plan and each staged plan its construction executed (plansOf); a
+  // CartesianProduct anywhere, or a BroadcastNestedLoopJoin whose
+  // broadcast side is not structurally bounded, fails unless the query
+  // carries a labeled allowlist entry below. A future query that
+  // accidentally composes a cross join therefore cannot ship unguarded
+  // (the r7 review's ask: the clean plan audit as an invariant, not a
+  // point-in-time fact).
   //
-  // Graph queries caveat: Graph.pageRank eagerly stages its edge list
-  // (Checkpoints.stage), so a cartesian INSIDE the edge derivation would
-  // execute during query construction without surfacing in the final
-  // plan this spec walks. The binding regression gate for those is the
-  // two-staged oracle instead: it reads the ADAPTIVE pair parquet, so an
-  // edge-derivation swap back to the O(N²) test oracle changes the
-  // result set and fails CORRECTNESS, not just a plan lint.
+  // Loop-round caveat: stages compiled with `keepPartitioning` run in
+  // the loop-compile session clone, whose listener manager is a copy
+  // taken when the clone was made, so plansOf does not capture them. The binding regression gate for
+  // the graph family's edge derivation is the two-staged oracle: it
+  // reads the ADAPTIVE pair parquet, so an edge-derivation swap back to
+  // the O(N²) test oracle changes the result set and fails CORRECTNESS,
+  // not just a plan lint.
 
   // No registered query is permitted a CartesianProduct today. If a
   // deliberate one ever becomes necessary, it must be named here WITH a
@@ -60,18 +97,32 @@ class PlanGuardSpec extends SparkSpecBase {
     "q_knn_recall" -> ("recall evaluation composes the q_knn_brute " +
       "baseline as its exact leg — the same fixed probe-set broadcast; " +
       "the IVF leg and the intersection are equi-joins"),
-    // q_knn_mips moved off this list in r15: its probe-set BNLJ now sits
-    // BELOW the orderedSmall staging boundary (the registered plan
-    // truncates at the staged LogicalRDD), so the sweep cannot see it —
-    // the dedicated scale-seam test below keeps policing the operator's
-    // subtree through SimilarityQueries.knnMipsScale.
-    // q_knn_pq moved off this list with q_knn_mips (r15) — same
-    // orderedSmall truncation, same scale-seam test below.
+    "q_knn_mips" -> ("norm-augmented IVF probe against the exact " +
+      "inner-product leg: broadcasts the fixed filter-selected probe set " +
+      "(inside the orderedSmall staged plan) against one linear corpus " +
+      "scan"),
+    "q_knn_mmr" -> ("MMR's candidate leg is the exact bruteForceTopK " +
+      "baseline (its staged cands frame): the fixed probe set broadcast " +
+      "against one linear corpus scan"),
+    "q_knn_pq" -> ("PQ ADC scan broadcasts the fixed probe set's " +
+      "distance tables (inside the orderedSmall staged plan) against " +
+      "one linear code-table scan"),
+    "q_knn_tuning" -> ("the nprobe recall curve's exact leg is the " +
+      "q_knn_brute baseline (inside a staged plan): the same fixed " +
+      "probe-set broadcast"),
+    "q_knn_tuning_pq" -> ("the refine recall curve broadcasts the fixed " +
+      "probe-set ids against one linear code-table scan (its staged ADC " +
+      "ranking) and composes the q_knn_brute exact leg"),
     "q_search_hybrid_rrf" -> ("hybrid retrieval broadcasts the fixed " +
       "probe set for the vector leg (the BM25 leg is equi-joined)"),
     "q_chapter_assign" -> ("T15 interval-overlap range join: broadcasts " +
       "the chapter-interval dimension (distinct chapters — " +
       "metadata-scale) under the pages scan"))
+
+  // Allowlisted builds that must be the narrow probe set (an id plus at
+  // most the probe vector or its derived table); q_chapter_assign
+  // broadcasts its interval dimension instead.
+  private val probeSetBuild = allowBnljBuild.keySet - "q_chapter_assign"
 
   // Fixture-audit note (NOT an allowlist entry — its joins are plain
   // equi-joins and pass the sweep untouched): q_rel_join_card's
@@ -113,7 +164,8 @@ class PlanGuardSpec extends SparkSpecBase {
 
   test("default-deny: no CartesianProduct in any registered query plan") {
     graft.SparkEntry.queries.keys.toSeq.sorted.foreach { q =>
-      val cart = names(q).filter(_.contains("CartesianProduct"))
+      val cart = allNodes(q).map(_.nodeName)
+        .filter(_.contains("CartesianProduct"))
       if (allowCartesian.contains(q))
         assert(cart.nonEmpty, s"stale allowlist entry: $q no longer has a " +
           "CartesianProduct — remove it from allowCartesian")
@@ -124,56 +176,25 @@ class PlanGuardSpec extends SparkSpecBase {
   test("default-deny: every BroadcastNestedLoopJoin broadcasts a bounded side") {
     import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
     graft.SparkEntry.queries.keys.toSeq.sorted.foreach { q =>
-      val unbounded = nodes(planOf(q)).collect {
+      val unbounded = allNodes(q).collect {
         case b: BroadcastNestedLoopJoinExec =>
-          val build =
-            if (b.buildSide.toString.contains("Left")) b.left else b.right
-          (b, build)
-      }.filterNot { case (_, build) => boundedBuild(build) }
-      if (allowBnljBuild.contains(q))
+          if (b.buildSide.toString.contains("Left")) b.left else b.right
+      }.filterNot(boundedBuild)
+      if (allowBnljBuild.contains(q)) {
         assert(unbounded.nonEmpty, s"stale allowlist entry: $q no longer " +
           "has a non-1-row BNLJ build side — remove it from allowBnljBuild")
-      else assert(unbounded.isEmpty,
+        // an allowlisted build must be a narrow probe-set projection (an
+        // id plus at most the probe vector / its derived table), so a
+        // wide corpus-side frame can never slip in under the exception
+        if (probeSetBuild(q)) unbounded.foreach { build =>
+          assert(build.output.size <= 3 &&
+            build.output.exists(a =>
+              a.name.contains("id") || a.name.contains("vec")),
+            s"$q BNLJ build side is not the probe set: ${build.output}")
+        }
+      } else assert(unbounded.isEmpty,
         s"$q broadcasts an unbounded side through BroadcastNestedLoopJoin " +
-          s"(not allowlisted): ${unbounded.map(_._2.nodeName)}")
-    }
-  }
-
-  test("staged ANN scale subtrees still broadcast exactly the probe set") {
-    // q_knn_mips' and q_knn_pq's deliberate non-1-row BNLJs (the fixed
-    // filter-selected probe-vector set against one linear corpus scan)
-    // moved below the orderedSmall staging boundary in r14, out of the
-    // registered-plan sweep's sight. Keep the exceptions honest the same
-    // way the allowlist's staleness check did: each operator's subtree
-    // (through its seam) must still carry one, and nothing else
-    // unbounded.
-    import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
-    val seams = Seq(
-      "q_knn_mips" -> graft.queries.SimilarityQueries.knnMipsScale _,
-      "q_knn_pq" -> graft.queries.SimilarityQueries.knnPqScale _)
-    seams.foreach { case (name, fn) =>
-      val plan = fn(spark, sfDir).queryExecution.executedPlan
-      assert(!nodes(plan).exists(_.nodeName.contains("CartesianProduct")),
-        s"$name scale subtree grew a CartesianProduct")
-      val unbounded = nodes(plan).collect {
-        case b: BroadcastNestedLoopJoinExec =>
-          val build =
-            if (b.buildSide.toString.contains("Left")) b.left else b.right
-          (b, build)
-      }.filterNot { case (_, build) => boundedBuild(build) }
-      assert(unbounded.nonEmpty,
-        s"stale exception: $name no longer has a non-1-row BNLJ build " +
-          "side below the staging boundary — fold it back into the sweep")
-      // every non-1-row build must be a narrow probe-set projection
-      // (an id plus at most the probe vector / its derived table) —
-      // the same labeled-waiver shape the allowlist documented; a wide
-      // corpus-side frame can never slip in under this exception
-      unbounded.foreach { case (_, build) =>
-        assert(build.output.size <= 3 &&
-          build.output.exists(a =>
-            a.name.contains("id") || a.name.contains("vec")),
-          s"$name BNLJ build side is not the probe set: ${build.output}")
-      }
+          s"(not allowlisted): ${unbounded.map(_.nodeName)}")
     }
   }
 
@@ -207,7 +228,7 @@ class PlanGuardSpec extends SparkSpecBase {
       case _ => false
     }
     graft.SparkEntry.queries.keys.toSeq.sorted.foreach { q =>
-      val unpartitioned = nodes(planOf(q)).collect {
+      val unpartitioned = allNodes(q).collect {
         case w: WindowExec if w.partitionSpec.isEmpty &&
           !bounded(w.child) => w
       }
@@ -226,13 +247,10 @@ class PlanGuardSpec extends SparkSpecBase {
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
     import org.apache.spark.sql.types.ArrayType
-    // the REGISTERED q_sim_cosine_pairs plan truncates at the
-    // orderedSmall lazy-checkpoint LogicalRDD (r14), hiding the pair
-    // generator — walk the operator's scale subtree through the seam
-    val plan = graft.queries.SimilarityQueries
-      .cosinePairsScale(spark, sfDir).queryExecution.executedPlan
+    // the registered plan reads the pair generator's staged result, so
+    // the generator is walked in the staged plans its construction ran;
     // the pair-dedup aggregate groups by (vec_a, vec_b)
-    val dedups = nodes(plan).collect {
+    val dedups = allNodes("q_sim_cosine_pairs").collect {
       case a: BaseAggregateExec
         if a.groupingExpressions.size == 2 &&
           a.groupingExpressions.forall(_.references.forall(r =>
