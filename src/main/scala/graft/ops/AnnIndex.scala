@@ -83,9 +83,12 @@ object AnnIndex {
       try {
         // the three metadata writes (driver-side rows) and the corpus
         // encode+write are mutually independent — overlap them; the
-        // codes write is the job that materializes the cache
+        // codes write is the job that materializes the cache. Codes are
+        // hash-partitioned by cell first, so each cell is ONE file (the
+        // upsert's rule): written straight from the scan, every task
+        // would add a file to each cell it holds.
         Par.run[Unit](
-          () => encoded.drop("d")
+          () => encoded.drop("d").repartition(col("cell"))
             .write.mode("overwrite").partitionBy("cell")
             .parquet(s"$vdir/codes"),
           () => centroids.zipWithIndex.map { case (w, c) => (c, w.toSeq) }
@@ -112,33 +115,20 @@ object AnnIndex {
         //    distance distribution under THESE quantizers (`d` from the
         //    encode pass; approx-quantile state is bounded). driftReport
         //    compares each future delta batch against this p95.
+        // Neither needs a shuffle for its one file: the manifest
+        // coalesces the cached partitions (as the upsert's does) and the
+        // global aggregate already ends in one partition.
         Par.run[Unit](
           () => encoded.select(col("vec_id"), col("cell"))
-            .repartition(1).write.mode("overwrite").parquet(s"$vdir/ids"),
+            .coalesce(1).write.mode("overwrite").parquet(s"$vdir/ids"),
           () => encoded
             .agg(count(lit(1)).as("n"),
               percentile_approx(col("d"), lit(0.95), lit(10000))
                 .as("p95_dist"))
-            .repartition(1).write.mode("overwrite").parquet(s"$vdir/stats"))
+            .write.mode("overwrite").parquet(s"$vdir/stats"))
       } finally encoded.unpersist(blocking = false)
     }
   }
-
-  /** Per-vector distance to its nearest centroid — the assignment
-    * distance the drift baseline and trigger both score. */
-  private def nearestDistU(centroids: Array[Array[Double]]) =
-    udf((v: Seq[Float]) => {
-      var best = Double.MaxValue
-      var c = 0
-      while (c < centroids.length) {
-        val cv = centroids(c)
-        var d = 0.0; var i = 0
-        while (i < cv.length) { val x = v(i) - cv(i); d += x * x; i += 1 }
-        if (d < best) best = d
-        c += 1
-      }
-      best
-    })
 
   /** Cell-level incremental UPSERT (r12 VERDICT #6): encode `newEmb`
     * with the current committed build's PINNED quantizers (no retrain —
@@ -273,24 +263,19 @@ object AnnIndex {
     val baseHits = Similarity
       .semDedupAdmitCandidates(delta, baseVecs, centroids, minCos, nProbe)
       .groupBy(col("vec_id")).agg(count(lit(1)).as("n_dups_base"))
-    val assignU = udf((v: Seq[Float]) => Similarity.nearestCell(centroids)(v))
-    val probesU = udf((v: Seq[Float]) =>
-      Similarity.nearestCells(centroids, nProbe)(v))
     // the delta's normed+assigned frame feeds both self-join sides and
     // the final projection — compute-once, single-plan consumer shape
-    val dd = Checkpoints.stage(
-      Similarity.withNorm(delta, "vec_id", "embedding")
-        .withColumn("cell", assignU(col("v").cast("array<float>"))),
+    val dd = Checkpoints.stage(Similarity.withNormCell(delta, centroids),
       eager = true)
     val aSide = dd
       .select(col("vec_id"), col("v").as("av"), col("nrm").as("an"),
-        explode(probesU(col("v").cast("array<float>"))).as("cell"))
+        explode(Similarity.probesU(centroids, nProbe)(
+          col("v").cast("array<float>"))).as("cell"))
     val bSide = dd.select(col("vec_id").as("b_id"), col("cell"),
       col("v").as("bv"), col("nrm").as("bn"))
     val deltaHits = aSide.join(bSide, Seq("cell"))
       .filter(col("b_id") < col("vec_id"))
-      .withColumn("cos", round(
-        Similarity.dot(col("av"), col("bv")) / (col("an") * col("bn")), 4))
+      .withColumn("cos", Similarity.roundedCos("av", "bv", "an", "bn"))
       .filter(col("cos") >= minCos)
       .groupBy(col("vec_id")).agg(count(lit(1)).as("n_dups_delta"))
     dd.select(col("vec_id"), col("cell"))
@@ -324,7 +309,9 @@ object AnnIndex {
           "save() to retrain and record the baseline"))
     val threshold = readPart(spark, vdir, "stats", statsDir)
       .head().getAs[Double]("p95_dist")
-    newEmb.select(nearestDistU(centroids)(col("embedding")).as("d"))
+    // each vector's nearest-centroid distance, as the baseline scored it
+    newEmb.select(Similarity.assignDistU(centroids)(col("embedding"))
+        .getField("_2").as("d"))
       .agg(count(lit(1)).as("n_new"),
         count(when(col("d") > threshold, 1)).as("n_beyond"))
       .select(col("n_new"), col("n_beyond"),
@@ -535,21 +522,18 @@ object AnnIndex {
   def probeCandidates(queries: DataFrame, codes: DataFrame,
       centroids: Array[Array[Double]], cbs: Array[Array[Array[Double]]],
       subDims: Int, nProbe: Int = 4): DataFrame = {
-    val probesU = udf((v: Seq[Float]) =>
-      Similarity.nearestCells(centroids, nProbe)(v))
     // per-query ADC table computed ONCE per arriving row (numSubspaces
     // × codebookSize doubles), then each candidate's distance is a
-    // codes-length gather over it
+    // codes-length gather over it (the table column decodes straight
+    // to primitive arrays, the same one conversion a Seq would cost)
     val dtableU = udf((v: Seq[Float]) => Similarity.adcTable(cbs, subDims)(v))
-    val adistU = udf((cs: Seq[Int], dt: Seq[Seq[Double]]) => {
-      var s = 0.0; var m = 0
-      while (m < cs.length) { s += dt(m)(cs(m)); m += 1 }
-      s
-    })
+    val adistU = udf((cs: Seq[Int], dt: Array[Array[Double]]) =>
+      Similarity.adcDist(dt, cs))
     val q = queries
       .select(col("vec_id").as("query_id"), col("embedding"))
       .withColumn("_dt", dtableU(col("embedding")))
-      .withColumn("cell", explode(probesU(col("embedding"))))
+      .withColumn("cell",
+        explode(Similarity.probesU(centroids, nProbe)(col("embedding"))))
     q.join(codes, Seq("cell"))
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),

@@ -1,18 +1,37 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Embedding similarity-search primitives: cosine math as codegen-friendly
-  * higher-order array expressions (no UDFs), brute-force top-k as the
-  * exact baseline, and random-hyperplane LSH bucketing as the scale path.
+/** Embedding similarity search: exact baselines and four approximate
+  * (ANN) paths over (vec_id, embedding) frames.
   *
-  * Scale posture: brute force is O(Q·N) — fine when Q (queries) is small
-  * and N streams through a broadcast of Q; the LSH variant buckets BOTH
-  * sides on an 8-bit signature so candidate generation is an equi-join on
-  * the bucket key (shuffle key = bucket), turning all-pairs into
-  * per-bucket work. Hyperplanes are md5-derived constants, so any engine
-  * (or the DuckDB oracle) can rebuild them bit-for-bit.
+  *  - Exact: [[bruteForceTopK]] (cosine) and [[mipsTopK]] (inner
+  *    product), O(Q·N) against a broadcast query set — the baseline every
+  *    ANN path's recall is measured against.
+  *  - LSH: multi-table random-hyperplane signatures ([[lshTopK]],
+  *    [[cosinePairsBucketed]], [[cosinePairsAdaptive]]); candidates are
+  *    an equi-join on (table, bucket), so all-pairs becomes per-bucket
+  *    work. Hyperplanes are md5-derived constants, so any engine (or the
+  *    DuckDB oracle) rebuilds them bit-for-bit.
+  *  - IVF: a deterministic coarse quantizer ([[ivfCentroids]]) routes
+  *    each vector to one cell and a query scans its nProbe nearest cells
+  *    ([[ivfTopK]], [[hardNegatives]], [[embeddingDecontaminate]],
+  *    [[ivfRecallSweep]]); k-means and SemDeDup share its Lloyd trainer.
+  *  - PQ: per-subspace codebooks compress each vector to byte codes,
+  *    scored with per-query ADC lookup tables, then an exact-cosine
+  *    refine ([[pqTopK]], [[pqRefineSweep]]).
+  *  - IVF-PQ: cells for routing, PQ codes within them ([[ivfPqTopK]]);
+  *    its build and query halves also back the persisted [[AnnIndex]].
+  *
+  * Every path calls one copy of each kernel: the squared-L2 centroid
+  * argmin [[nearestCellDist]] and probe order [[nearestCells]] (ties to
+  * the lower cell), the PQ encoder [[pqEncode]], the ADC gather
+  * [[adcDist]], the rounded cosine column [[roundedCos]] and the
+  * per-query `row_number` top-k [[topKPerQuery]]. Cosine math runs as
+  * codegen'd array expressions; the quantizer kernels run in UDFs built
+  * by one constructor each ([[assignU]], [[probesU]], [[pqEncodeU]]).
   */
 object Similarity {
 
@@ -126,19 +145,37 @@ object Similarity {
     * are applied BEFORE ranking so results are rank-stable across engines. */
   def bruteForceTopK(emb: DataFrame, queries: DataFrame, k: Int,
       cosRound: Int = 4): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val e = withNorm(emb, "vec_id", "embedding")
     val q = withNorm(queries, "vec_id", "embedding")
       .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qn"))
-    val scored = e.crossJoin(broadcast(q))
+    neighborsByCos(e.crossJoin(broadcast(q))
       .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("cos", round(dot(col("v"), col("qv")) / (col("nrm") * col("qn")), cosRound))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("vec_id"))
-    scored.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
-      .select(col("query_id"), col("rk"), col("vec_id").as("neighbor_id"), col("cos"))
+      .withColumn("cos", roundedCos("v", "qv", "nrm", "qn", cosRound)), k)
   }
+
+  /** The rounded cosine `round(dot(a, b) / (na · nb), scale)` of two
+    * double-array columns and their norms — the one score every exact
+    * and approximate cosine path ranks or thresholds by. */
+  private[ops] def roundedCos(a: String, b: String, na: String, nb: String,
+      scale: Int = 4): Column =
+    round(dot(col(a), col(b)) / (col(na) * col(nb)), scale)
+
+  /** Each query's best `k` rows of `scored`: `rank` = row_number over
+    * `by` (the query id, after any extra keys) ordered by `order`, kept
+    * where `rank <= k`. The per-query tail of every ranked ANN path. */
+  private def topKPerQuery(scored: DataFrame, k: Int, order: Seq[Column],
+      rank: String = "rk", by: Seq[String] = Seq("query_id")): DataFrame =
+    scored
+      .withColumn(rank, row_number().over(
+        Window.partitionBy(by.map(col): _*).orderBy(order: _*)))
+      .filter(col(rank) <= k)
+
+  /** The cosine top-k tail of the exact, LSH and IVF paths: (cos DESC,
+    * vec_id) per query → (query_id, rk, neighbor_id, cos). */
+  private def neighborsByCos(scored: DataFrame, k: Int): DataFrame =
+    topKPerQuery(scored, k, Seq(col("cos").desc, col("vec_id")))
+      .select(col("query_id"), col("rk"), col("vec_id").as("neighbor_id"),
+        col("cos"))
 
   /** Exact max-inner-product top-k (brute) — the MIPS oracle surface.
     * Inner product, unlike cosine, rewards magnitude (the
@@ -147,17 +184,13 @@ object Similarity {
     * tiebreak, self-matches excluded. */
   def mipsTopK(emb: DataFrame, queries: DataFrame, k: Int,
       ipRound: Int = 4): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val e = emb.select(col("vec_id"), asDouble(col("embedding")).as("v"))
     val q = queries.select(col("vec_id").as("query_id"),
       asDouble(col("embedding")).as("qv"))
     val scored = e.crossJoin(broadcast(q))
       .filter(col("vec_id") =!= col("query_id"))
       .withColumn("ip", round(dot(col("v"), col("qv")), ipRound))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("ip").desc, col("vec_id"))
-    scored.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
+    topKPerQuery(scored, k, Seq(col("ip").desc, col("vec_id")))
       .select(col("query_id"), col("rk"), col("vec_id").as("neighbor_id"),
         col("ip"))
   }
@@ -218,7 +251,6 @@ object Similarity {
     * the `1−λ` double literal verbatim. */
   def mmrTopK(emb: DataFrame, queries: DataFrame, k: Int, candK: Int,
       lambda: Double, cosRound: Int = 4): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val cands = Checkpoints.stage(
       bruteForceTopK(emb, queries, candK, cosRound)
         .select(col("query_id"), col("neighbor_id").as("cand_id"),
@@ -236,8 +268,7 @@ object Similarity {
         .filter(col("a_id") =!= col("b_id"))
         .join(va, "a_id").join(vb, "b_id")
         .select(col("query_id"), col("a_id"), col("b_id"),
-          round(dot(col("av"), col("bv")) / (col("an") * col("bn")), cosRound)
-            .as("sim")),
+          roundedCos("av", "bv", "an", "bn", cosRound).as("sim")),
       eager = true)
     val empty = cands
       .select(col("query_id"), col("cand_id"), col("rel"),
@@ -256,10 +287,8 @@ object Similarity {
         .withColumn("score",
           round(lit(lambda) * col("rel") -
             lit(1 - lambda) * coalesce(col("ms"), lit(0.0)), 6))
-      val w = Window.partitionBy(col("query_id"))
-        .orderBy(col("score").desc, col("cand_id"))
-      val pick = scored.withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1)
+      val pick = topKPerQuery(scored, 1, Seq(col("score").desc, col("cand_id")),
+          "rn")
         .select(col("query_id"), col("cand_id"), col("rel"), col("score"),
           lit(j.toLong).as("rk"))
       val next = Checkpoints.stage(sel.unionByName(pick), eager = true)
@@ -317,7 +346,6 @@ object Similarity {
     * of T×N rows instead of the N×Q cross product. */
   def lshTopK(emb: DataFrame, queries: DataFrame, k: Int,
       numTables: Int = 8, planesPerTable: Int = 4, dims: Int = 64): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val e = tableBuckets(withNorm(emb, "vec_id", "embedding"),
       numTables, planesPerTable, dims)
     val q = tableBuckets(withNorm(queries, "vec_id", "embedding"),
@@ -329,39 +357,64 @@ object Similarity {
       .select(col("query_id"), col("vec_id"), col("v"), col("nrm"),
         col("qv"), col("qn"))
       .dropDuplicates("query_id", "vec_id")
-    val scored = candidates
-      .withColumn("cos", round(dot(col("v"), col("qv")) / (col("nrm") * col("qn")), 4))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("vec_id"))
-    scored.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
-      .select(col("query_id"), col("rk"), col("vec_id").as("neighbor_id"), col("cos"))
+    neighborsByCos(
+      candidates.withColumn("cos", roundedCos("v", "qv", "nrm", "qn")), k)
   }
 
-  /** The `nProbe` cells nearest to `v` by squared L2 to each centroid,
-    * distance ties to the lower cell (a stable sort): the probe set of
-    * every IVF path and of its DuckDB mirrors' `ORDER BY dist, cell`. */
+  /** Squared L2 distance from `v` to centroid `cv`, summed in
+    * dimension order (the float coordinates widen to double). */
+  private def centroidD2(cv: Array[Double], v: Seq[Float]): Double = {
+    var d = 0.0; var i = 0
+    while (i < cv.length) { val x = v(i) - cv(i); d += x * x; i += 1 }
+    d
+  }
+
+  /** The cells nearest to `v` by [[centroidD2]], the first `nProbe` of
+    * them, distance ties to the lower cell (a stable sort): the probe set
+    * of every IVF path and of its DuckDB mirrors' `ORDER BY dist, cell`.
+    * Its head is [[nearestCell]], so a vector's own cell is its query's
+    * first probe. */
   private[ops] def nearestCells(cs: Array[Array[Double]], nProbe: Int)
-      (v: Seq[Float]): Array[Int] = {
-    val ds = cs.zipWithIndex.map { case (cv, c) =>
-      var d = 0.0; var i = 0
-      while (i < cv.length) { val x = v(i) - cv(i); d += x * x; i += 1 }
-      (c, d)
-    }
-    ds.sortBy(_._2).take(nProbe).map(_._1)
-  }
+      (v: Seq[Float]): Array[Int] =
+    cs.zipWithIndex.map { case (cv, c) => (c, centroidD2(cv, v)) }
+      .sortBy(_._2).take(nProbe).map(_._1)
 
-  private[ops] def nearestCell(cs: Array[Array[Double]])(v: Seq[Float]): Int = {
+  /** The nearest centroid to `v` and its squared distance, ties to the
+    * lower cell: the assignment of every coarse quantizer (IVF cells,
+    * Lloyd steps, k-means, SemDeDup, the index drift distance). */
+  private[ops] def nearestCellDist(cs: Array[Array[Double]])
+      (v: Seq[Float]): (Int, Double) = {
     var best = 0; var bestD = Double.MaxValue; var c = 0
     while (c < cs.length) {
-      var d = 0.0; var i = 0
-      val cv = cs(c)
-      while (i < cv.length) { val x = v(i) - cv(i); d += x * x; i += 1 }
+      val d = centroidD2(cs(c), v)
       if (d < bestD) { bestD = d; best = c }
       c += 1
     }
-    best
+    (best, bestD)
   }
+
+  private[ops] def nearestCell(cs: Array[Array[Double]])(v: Seq[Float]): Int =
+    nearestCellDist(cs)(v)._1
+
+  /** UDF: a float vector's cell under `cs` ([[nearestCell]]). */
+  private[ops] def assignU(cs: Array[Array[Double]]) =
+    udf((v: Seq[Float]) => nearestCell(cs)(v))
+
+  /** UDF: a float vector's (cell, squared distance) as a struct
+    * (`_1`, `_2`) ([[nearestCellDist]]). */
+  private[ops] def assignDistU(cs: Array[Array[Double]]) =
+    udf((v: Seq[Float]) => nearestCellDist(cs)(v))
+
+  /** UDF: a float vector's `nProbe` probe cells ([[nearestCells]]). */
+  private[ops] def probesU(cs: Array[Array[Double]], nProbe: Int) =
+    udf((v: Seq[Float]) => nearestCells(cs, nProbe)(v))
+
+  /** (id, v, nrm) of [[withNorm]] plus each vector's `cell` under `cs`:
+    * the assigned (corpus) side of every IVF candidate join. */
+  private[ops] def withNormCell(df: DataFrame,
+      cs: Array[Array[Double]]): DataFrame =
+    withNorm(df, "vec_id", "embedding")
+      .withColumn("cell", assignU(cs)(col("v").cast("array<float>")))
 
   /** Deterministic coarse quantizer shared by ivfTopK and ivfPqTopK:
     * seeds = first `numCells` vectors by id, then ONE Lloyd iteration
@@ -373,11 +426,6 @@ object Similarity {
   private[ops] def ivfCentroids(emb: DataFrame, numCells: Int): Array[Array[Double]] =
     lloydCentroids(emb, numCells, iters = 1)
 
-  /** `iters` exact-decimal Lloyd iterations from first-`k`-by-id seeds.
-    * A cell that loses all members keeps its PREVIOUS centroid (the
-    * COALESCE in the mirror SQL). Each iteration is one distributed
-    * assign + one (cell, dim) mean aggregation; only the k×dims centroid
-    * matrix ever reaches the driver. */
   /** First-`k`-by-id seed vectors as doubles — ONE TakeOrdered collect,
     * shared by the IVF and PQ trainers when a caller (AnnIndex.save)
     * needs both: the two standalone trainers each collected the same
@@ -387,6 +435,11 @@ object Similarity {
       .orderBy(col("vec_id")).limit(k)
       .collect().map(_.getSeq[Float](1).map(_.toDouble).toArray)
 
+  /** `iters` exact-decimal Lloyd iterations from first-`k`-by-id seeds.
+    * A cell that loses all members keeps its PREVIOUS centroid (the
+    * COALESCE in the mirror SQL). Each iteration is one distributed
+    * assign + one (cell, dim) mean aggregation; only the k×dims centroid
+    * matrix ever reaches the driver. */
   private[graft] def lloydCentroids(emb: DataFrame, k: Int,
       iters: Int): Array[Array[Double]] =
     lloydCentroidsFrom(emb, seedVectors(emb, k), k, iters)
@@ -396,7 +449,7 @@ object Similarity {
       seeds: Array[Array[Double]], k: Int,
       iters: Int): Array[Array[Double]] = {
     (1 to iters).foldLeft(seeds) { (cents, _) =>
-      val assign = udf((v: Seq[Float]) => nearestCell(cents)(v))
+      val assign = assignU(cents)
       // UDF evaluated BELOW the generator (localCheckpoint would be
       // overkill; the distinct Dataset boundary keeps the projection from
       // collapsing into the Generate) — in one projection with posexplode
@@ -425,18 +478,7 @@ object Similarity {
     * broadcast k×dims matrix — no shuffle at all in the final pass. */
   def kMeans(emb: DataFrame, k: Int = 8, iters: Int = 3): DataFrame = {
     val cents = lloydCentroids(emb, k, iters)
-    val assign = udf((v: Seq[Float]) => {
-      var best = 0; var bestD = Double.MaxValue; var c = 0
-      while (c < cents.length) {
-        var d = 0.0; var i = 0
-        val cv = cents(c)
-        while (i < cv.length) { val x = v(i) - cv(i); d += x * x; i += 1 }
-        if (d < bestD) { bestD = d; best = c }
-        c += 1
-      }
-      (best, bestD)
-    })
-    emb.select(col("vec_id"), assign(col("embedding")).as("a"))
+    emb.select(col("vec_id"), assignDistU(cents)(col("embedding")).as("a"))
       .select(col("vec_id"), col("a._1").as("cluster"),
         round(col("a._2"), 6).as("d2"))
   }
@@ -496,7 +538,6 @@ object Similarity {
     * cell's true top-quota is also in its own salt-slice's top-quota. */
   def clusterBalancedSample(emb: DataFrame, k: Int = 8, iters: Int = 3,
       quota: Int = 20, preSalts: Int = 16): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val asg = kMeans(emb, k, iters)
     val hv = conv(substring(md5(col("vec_id").cast("string").cast("binary")),
       1, 15), 16, 10).cast("long") + lit(1L)
@@ -523,25 +564,16 @@ object Similarity {
     * Scale: candidates/query ≈ N·nProbe/C, tunable independently of N. */
   def ivfTopK(emb: DataFrame, queries: DataFrame, k: Int,
       numCells: Int = 16, nProbe: Int = 4): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val centroids = ivfCentroids(emb, numCells)
-    val assign = udf((v: Seq[Float]) => nearestCell(centroids)(v))
-    val probes = udf((v: Seq[Float]) => nearestCells(centroids, nProbe)(v))
-
-    val e = withNorm(emb, "vec_id", "embedding")
-      .withColumn("cell", assign(col("v").cast("array<float>")))
+    val e = withNormCell(emb, centroids)
     val q = withNorm(queries, "vec_id", "embedding")
-      .withColumn("cell", explode(probes(col("v").cast("array<float>"))))
+      .withColumn("cell",
+        explode(probesU(centroids, nProbe)(col("v").cast("array<float>"))))
       .select(col("vec_id").as("query_id"), col("v").as("qv"),
         col("nrm").as("qn"), col("cell"))
-    val scored = e.join(broadcast(q), Seq("cell"))
+    neighborsByCos(e.join(broadcast(q), Seq("cell"))
       .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("cos", round(dot(col("v"), col("qv")) / (col("nrm") * col("qn")), 4))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("vec_id"))
-    scored.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
-      .select(col("query_id"), col("rk"), col("vec_id").as("neighbor_id"), col("cos"))
+      .withColumn("cos", roundedCos("v", "qv", "nrm", "qn")), k)
   }
 
   /** Hard-negative mining for contrastive training (the batch-mining
@@ -565,27 +597,21 @@ object Similarity {
   def hardNegatives(emb: DataFrame, queries: DataFrame, k: Int,
       labelCol: String = "label", numCells: Int = 16,
       nProbe: Int = 4): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val centroids = ivfCentroids(emb, numCells)
-    val assign = udf((v: Seq[Float]) => nearestCell(centroids)(v))
-    val probes = udf((v: Seq[Float]) => nearestCells(centroids, nProbe)(v))
     val e = emb.select(col("vec_id"), asDouble(col("embedding")).as("v"),
       col(labelCol).as("neighbor_label"))
       .withColumn("nrm", norm(col("v")))
-      .withColumn("cell", assign(col("v").cast("array<float>")))
+      .withColumn("cell", assignU(centroids)(col("v").cast("array<float>")))
     val q = queries.select(col("vec_id").as("query_id"),
       asDouble(col("embedding")).as("qv"), col(labelCol).as("query_label"))
       .withColumn("qn", norm(col("qv")))
-      .withColumn("cell", explode(probes(col("qv").cast("array<float>"))))
+      .withColumn("cell",
+        explode(probesU(centroids, nProbe)(col("qv").cast("array<float>"))))
     val scored = e.join(broadcast(q), Seq("cell"))
       .filter(col("vec_id") =!= col("query_id") &&
         col("neighbor_label") =!= col("query_label"))
-      .withColumn("cos",
-        round(dot(col("v"), col("qv")) / (col("nrm") * col("qn")), 4))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("vec_id"))
-    scored.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
+      .withColumn("cos", roundedCos("v", "qv", "nrm", "qn"))
+    topKPerQuery(scored, k, Seq(col("cos").desc, col("vec_id")))
       .select(col("query_id"), col("query_label"), col("rk"),
         col("vec_id").as("neighbor_id"), col("neighbor_label"), col("cos"))
   }
@@ -608,18 +634,15 @@ object Similarity {
   def embeddingDecontaminate(emb: DataFrame, probes: DataFrame,
       minCos: Double, numCells: Int = 16, nProbe: Int = 4): DataFrame = {
     val centroids = ivfCentroids(emb, numCells)
-    val probeCells = udf((v: Seq[Float]) => nearestCells(centroids, nProbe)(v))
-    val assign = udf((v: Seq[Float]) => nearestCell(centroids)(v))
-    val e = withNorm(emb, "vec_id", "embedding")
-      .withColumn("cell", assign(col("v").cast("array<float>")))
+    val e = withNormCell(emb, centroids)
     val q = withNorm(probes, "vec_id", "embedding")
       .select(col("vec_id").as("probe_id"), col("v").as("qv"),
         col("nrm").as("qn"))
-      .withColumn("cell", explode(probeCells(col("qv").cast("array<float>"))))
+      .withColumn("cell",
+        explode(probesU(centroids, nProbe)(col("qv").cast("array<float>"))))
     e.join(broadcast(q), Seq("cell"))
       .filter(col("vec_id") =!= col("probe_id"))
-      .withColumn("cos",
-        round(dot(col("v"), col("qv")) / (col("nrm") * col("qn")), 4))
+      .withColumn("cos", roundedCos("v", "qv", "nrm", "qn"))
       .filter(col("cos") >= minCos)
       .select(col("probe_id"), col("vec_id").as("corpus_id"), col("cos"))
   }
@@ -645,7 +668,6 @@ object Similarity {
   def semDedupAdmitCandidates(delta: DataFrame, baseWithCells: DataFrame,
       centroids: Array[Array[Double]], minCos: Double,
       nProbe: Int = 4): DataFrame = {
-    val probeCells = udf((v: Seq[Float]) => nearestCells(centroids, nProbe)(v))
     val b = baseWithCells
       .select(col("vec_id").as("base_id"), col("cell"),
         asDouble(col("embedding")).as("bv"))
@@ -653,11 +675,11 @@ object Similarity {
     val q = delta
       .select(col("vec_id"), asDouble(col("embedding")).as("dv"))
       .withColumn("dn", norm(col("dv")))
-      .withColumn("cell", explode(probeCells(col("dv").cast("array<float>"))))
+      .withColumn("cell",
+        explode(probesU(centroids, nProbe)(col("dv").cast("array<float>"))))
     q.join(b, Seq("cell"))
       .filter(col("base_id") =!= col("vec_id"))
-      .withColumn("cos",
-        round(dot(col("dv"), col("bv")) / (col("dn") * col("bn")), 4))
+      .withColumn("cos", roundedCos("dv", "bv", "dn", "bn"))
       .filter(col("cos") >= minCos)
       .select(col("vec_id"), col("base_id"), col("cos"))
   }
@@ -687,22 +709,13 @@ object Similarity {
   def ivfRecallSweep(emb: DataFrame, queries: DataFrame, k: Int,
       numCells: Int = 16,
       probes: Seq[Int] = Seq(1, 2, 4, 8, 16)): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val cents = ivfCentroids(emb, numCells)
-    val assign = udf((v: Seq[Float]) => nearestCell(cents)(v))
-    val rankCells = udf((v: Seq[Float]) => {
-      val ds = cents.zipWithIndex.map { case (cv, c) =>
-        var d = 0.0; var i = 0
-        while (i < cv.length) { val x = v(i) - cv(i); d += x * x; i += 1 }
-        (c, d)
-      }
-      // stable sort: distance ties keep the lower cell first, matching
-      // ivfTopK's take(nProbe) and the mirror's ORDER BY dist, cell
-      ds.sortBy(_._2).zipWithIndex
-        .map { case ((c, _), r) => (c, r + 1) }.toSeq
-    })
-    val e = withNorm(emb, "vec_id", "embedding")
-      .withColumn("cell", assign(col("v").cast("array<float>")))
+    // every cell with its 1-based probe rank: the full probe order, so
+    // rank r is the r-th probe of ivfTopK and of the mirror
+    val rankCells = udf((v: Seq[Float]) =>
+      nearestCells(cents, cents.length)(v).zipWithIndex
+        .map { case (c, r) => (c, r + 1) }.toSeq)
+    val e = withNormCell(emb, cents)
     val qr = withNorm(queries, "vec_id", "embedding")
       .withColumn("cr", explode(rankCells(col("v").cast("array<float>"))))
       .select(col("vec_id").as("query_id"), col("v").as("qv"),
@@ -713,8 +726,7 @@ object Similarity {
     val scoredAll = Checkpoints.stage(
       e.join(broadcast(qr), Seq("cell"))
         .filter(col("vec_id") =!= col("query_id"))
-        .withColumn("cos",
-          round(dot(col("v"), col("qv")) / (col("nrm") * col("qn")), 4))
+        .withColumn("cos", roundedCos("v", "qv", "nrm", "qn"))
         .select(col("query_id"), col("cell_rank").as("_depth"),
           col("vec_id").as("neighbor_id"), col("cos")),
       eager = false)
@@ -734,46 +746,51 @@ object Similarity {
   def pqRefineSweep(emb: DataFrame, queries: DataFrame, k: Int,
       numSubspaces: Int = 8, codebookSize: Int = 16, dims: Int = 64,
       refines: Seq[Int] = Seq(1, 2, 5, 10)): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val subDims = dims / numSubspaces
-    require(subDims * numSubspaces == dims, "dims must split evenly")
-    val sub = pqSub(subDims) _
-    val cbs = pqCodebooks(emb, numSubspaces, codebookSize, subDims)
-    val encode = udf((v: Seq[Float]) => {
-      val dv = v.map(_.toDouble).toIndexedSeq
-      Array.tabulate(numSubspaces)(m => pqArgmin(cbs(m), sub(dv, m)))
-    })
-    val dtables = pqDtables(queries, cbs, subDims)
-    val adistU = udf((codes: Seq[Int], qid: Long) => {
-      val dt = dtables(qid)
-      var s = 0.0; var m = 0
-      while (m < codes.length) { s += dt(m)(codes(m)); m += 1 }
-      s
-    })
-    val maxR = refines.max
-    val codes = emb.select(col("vec_id"), encode(col("embedding")).as("codes"))
-    val qids = broadcast(queries.select(col("vec_id").as("query_id")))
-    val wA = Window.partitionBy(col("query_id"))
-      .orderBy(col("adist").asc, col("vec_id"))
-    val cand = codes.crossJoin(qids)
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("adist", round(adistU(col("codes"), col("query_id")), 6))
-      .withColumn("ark", row_number().over(wA))
-      .filter(col("ark") <= k * maxR)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"), col("ark"))
-    val e = withNorm(emb, "vec_id", "embedding")
-    val q = withNorm(queries, "vec_id", "embedding")
-      .select(col("vec_id").as("query_id"), col("v").as("qv"),
-        col("nrm").as("qn"))
+    val cand = pqCandidates(emb, queries, k * refines.max, numSubspaces,
+      codebookSize, dims)
+      .select(col("query_id"), col("neighbor_id"), col("ark"))
     val scoredAll = Checkpoints.stage(
-      cand.join(e.withColumnRenamed("vec_id", "neighbor_id"), "neighbor_id")
-        .join(broadcast(q), "query_id")
-        .withColumn("cos",
-          round(dot(col("v"), col("qv")) / (col("nrm") * col("qn")), 4))
+      rescored(cand, emb, queries)
         .select(col("query_id"), col("ark").as("_depth"),
           col("neighbor_id"), col("cos")),
       eager = false)
     recallCurve(scoredAll, emb, queries, k, "refine", refines, r => k * r)
+  }
+
+  /** The ADC candidate stage of [[pqTopK]] and [[pqRefineSweep]]: train
+    * the codebooks on `emb`, encode it, score every (code, query) pair
+    * through the query's ADC table (self-matches excluded, adist rounded
+    * to 6) and keep each query's first `depth` by (adist ASC, vec_id) as
+    * `ark`. Output: (query_id, neighbor_id, adist, ark). */
+  private def pqCandidates(emb: DataFrame, queries: DataFrame, depth: Int,
+      numSubspaces: Int, codebookSize: Int, dims: Int): DataFrame = {
+    val subDims = dims / numSubspaces
+    require(subDims * numSubspaces == dims, "dims must split evenly")
+    val cbs = pqCodebooks(emb, numSubspaces, codebookSize, subDims)
+    val encode = pqEncodeU(cbs, subDims)
+    val dtables = pqDtables(queries, cbs, subDims)
+    val adistU = udf((codes: Seq[Int], qid: Long) =>
+      adcDist(dtables(qid), codes))
+    val scored = emb.select(col("vec_id"), encode(col("embedding")).as("codes"))
+      .crossJoin(broadcast(queries.select(col("vec_id").as("query_id"))))
+      .filter(col("vec_id") =!= col("query_id"))
+      .withColumn("adist", round(adistU(col("codes"), col("query_id")), 6))
+    topKPerQuery(scored, depth, Seq(col("adist").asc, col("vec_id")), "ark")
+      .select(col("query_id"), col("vec_id").as("neighbor_id"), col("adist"),
+        col("ark"))
+  }
+
+  /** PQ candidates (query_id, neighbor_id, …) joined to their raw
+    * vectors in `emb` and the queries' for the exact cosine `cos`. */
+  private def rescored(cand: DataFrame, emb: DataFrame,
+      queries: DataFrame): DataFrame = {
+    val e = withNorm(emb, "vec_id", "embedding")
+    val q = withNorm(queries, "vec_id", "embedding")
+      .select(col("vec_id").as("query_id"), col("v").as("qv"),
+        col("nrm").as("qn"))
+    cand.join(e.withColumnRenamed("vec_id", "neighbor_id"), "neighbor_id")
+      .join(broadcast(q), "query_id")
+      .withColumn("cos", roundedCos("v", "qv", "nrm", "qn"))
   }
 
   /** Rank-r binary-relevance DCG gain 1/log2(r+1), built as
@@ -817,7 +834,6 @@ object Similarity {
   private def recallCurve(scoredAll: DataFrame, emb: DataFrame,
       queries: DataFrame, k: Int, depthName: String, depths: Seq[Int],
       limitFor: Int => Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val brute = Checkpoints.stage(
       bruteForceTopK(emb, queries, k)
         .select(col("query_id"), col("neighbor_id")),
@@ -840,10 +856,8 @@ object Similarity {
     val cand = scoredAll.join(depthDf, col("_depth") <= col("_lim"))
     val counts = cand.groupBy(col("_d"), col("query_id"))
       .agg(count(lit(1)).as("n_cand"))
-    val w = Window.partitionBy(col("_d"), col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    val topk = cand.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
+    val topk = topKPerQuery(cand, k, Seq(col("cos").desc, col("neighbor_id")),
+        by = Seq("_d", "query_id"))
       .select(col("_d"), col("query_id"), col("neighbor_id"), col("rk"))
     val hits = topk.join(brute, Seq("query_id", "neighbor_id"))
       .groupBy(col("_d"), col("query_id"))
@@ -915,6 +929,27 @@ object Similarity {
     best
   }
 
+  /** A vector's PQ codes: per subspace, the nearest code of that
+    * subspace's codebook (ties to the lower code). */
+  private[ops] def pqEncode(cbs: Array[Array[Array[Double]]], subDims: Int)
+      (v: Seq[Float]): Array[Int] = {
+    val dv = v.map(_.toDouble).toIndexedSeq
+    Array.tabulate(cbs.length)(m => pqArgmin(cbs(m), pqSub(subDims)(dv, m)))
+  }
+
+  /** UDF: a float vector's PQ codes ([[pqEncode]]). */
+  private[ops] def pqEncodeU(cbs: Array[Array[Array[Double]]], subDims: Int) =
+    udf((v: Seq[Float]) => pqEncode(cbs, subDims)(v))
+
+  /** ADC distance of a code vector: the query table's entry for each
+    * subspace's code, summed in subspace order. */
+  private[ops] def adcDist(dt: Array[Array[Double]],
+      codes: Seq[Int]): Double = {
+    var s = 0.0; var m = 0
+    while (m < codes.length) { s += dt(m)(codes(m)); m += 1 }
+    s
+  }
+
   /** Deterministic per-subspace PQ codebooks shared by pqTopK and
     * ivfPqTopK: seeds = subvectors of the first `codebookSize` vectors
     * by id, then one exact-decimal Lloyd step per (subspace, code);
@@ -931,10 +966,7 @@ object Similarity {
     val sub = pqSub(subDims) _
     val seedCbs = Array.tabulate(numSubspaces, codebookSize)((m, c) =>
       sub(seedVecs(c).toIndexedSeq, m))
-    val encode0 = udf((v: Seq[Float]) => {
-      val dv = v.map(_.toDouble).toIndexedSeq
-      Array.tabulate(numSubspaces)(m => pqArgmin(seedCbs(m), sub(dv, m)))
-    })
+    val encode0 = pqEncodeU(seedCbs, subDims)
     val refined = emb
       .select(col("vec_id"), encode0(col("embedding")).as("c0"),
         col("embedding"))
@@ -974,44 +1006,12 @@ object Similarity {
   def pqTopK(emb: DataFrame, queries: DataFrame, k: Int,
       numSubspaces: Int = 8, codebookSize: Int = 16, dims: Int = 64,
       refine: Int = 5): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val subDims = dims / numSubspaces
-    require(subDims * numSubspaces == dims, "dims must split evenly")
-    val sub = pqSub(subDims) _
-    val cbs = pqCodebooks(emb, numSubspaces, codebookSize, subDims)
-    val encode = udf((v: Seq[Float]) => {
-      val dv = v.map(_.toDouble).toIndexedSeq
-      Array.tabulate(numSubspaces)(m => pqArgmin(cbs(m), sub(dv, m)))
-    })
-    val dtables = pqDtables(queries, cbs, subDims)
-    val adistU = udf((codes: Seq[Int], qid: Long) => {
-      val dt = dtables(qid)
-      var s = 0.0; var m = 0
-      while (m < codes.length) { s += dt(m)(codes(m)); m += 1 }
-      s
-    })
-
-    val codes = emb.select(col("vec_id"), encode(col("embedding")).as("codes"))
-    val qids = broadcast(queries.select(col("vec_id").as("query_id")))
-    val wA = Window.partitionBy(col("query_id"))
-      .orderBy(col("adist").asc, col("vec_id"))
-    val cand = codes.crossJoin(qids)
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("adist", round(adistU(col("codes"), col("query_id")), 6))
-      .withColumn("ark", row_number().over(wA))
-      .filter(col("ark") <= k * refine)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"), col("adist"))
+    val cand = pqCandidates(emb, queries, k * refine, numSubspaces,
+      codebookSize, dims)
+      .select(col("query_id"), col("neighbor_id"), col("adist"))
     // exact rescore of the surviving candidates only, re-rank by cosine
-    val e = withNorm(emb, "vec_id", "embedding")
-    val q = withNorm(queries, "vec_id", "embedding")
-      .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qn"))
-    val wC = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    cand.join(e.withColumnRenamed("vec_id", "neighbor_id"), "neighbor_id")
-      .join(broadcast(q), "query_id")
-      .withColumn("cos", round(dot(col("v"), col("qv")) / (col("nrm") * col("qn")), 4))
-      .withColumn("rk", row_number().over(wC))
-      .filter(col("rk") <= k)
+    topKPerQuery(rescored(cand, emb, queries), k,
+        Seq(col("cos").desc, col("neighbor_id")))
       .select(col("query_id"), col("rk"), col("neighbor_id"), col("adist"), col("cos"))
   }
 
@@ -1044,47 +1044,20 @@ object Similarity {
     * to per-subspace codebook codes. */
   private[ops] def encodeIvfPq(emb: DataFrame,
       centroids: Array[Array[Double]], cbs: Array[Array[Array[Double]]],
-      subDims: Int): DataFrame = {
-    val sub = pqSub(subDims) _
-    val assign = udf((v: Seq[Float]) => nearestCell(centroids)(v))
-    val encode = udf((v: Seq[Float]) => {
-      val dv = v.map(_.toDouble).toIndexedSeq
-      Array.tabulate(cbs.length)(m => pqArgmin(cbs(m), sub(dv, m)))
-    })
-    emb.select(col("vec_id"),
-      assign(col("embedding")).as("cell"),
-      encode(col("embedding")).as("codes"))
-  }
+      subDims: Int): DataFrame =
+    encodeIvfPqDist(emb, centroids, cbs, subDims).drop("d")
 
   /** [[encodeIvfPq]] plus the nearest-centroid squared distance `d` in
     * the SAME scan (the argmin already computes it) — AnnIndex.save's
     * drift baseline aggregates `d` off this frame's cache instead of
-    * paying a second full corpus pass. cell/codes are bit-identical to
-    * [[encodeIvfPq]] (same argmin loops). */
+    * paying a second full corpus pass. */
   private[ops] def encodeIvfPqDist(emb: DataFrame,
       centroids: Array[Array[Double]], cbs: Array[Array[Array[Double]]],
-      subDims: Int): DataFrame = {
-    val sub = pqSub(subDims) _
-    val assignD = udf((v: Seq[Float]) => {
-      var best = 0; var bestD = Double.MaxValue; var c = 0
-      while (c < centroids.length) {
-        val cv = centroids(c)
-        var d = 0.0; var i = 0
-        while (i < cv.length) { val x = v(i) - cv(i); d += x * x; i += 1 }
-        if (d < bestD) { bestD = d; best = c }
-        c += 1
-      }
-      (best, bestD)
-    })
-    val encode = udf((v: Seq[Float]) => {
-      val dv = v.map(_.toDouble).toIndexedSeq
-      Array.tabulate(cbs.length)(m => pqArgmin(cbs(m), sub(dv, m)))
-    })
-    emb.select(col("vec_id"), assignD(col("embedding")).as("a"),
-        encode(col("embedding")).as("codes"))
+      subDims: Int): DataFrame =
+    emb.select(col("vec_id"), assignDistU(centroids)(col("embedding")).as("a"),
+        pqEncodeU(cbs, subDims)(col("embedding")).as("codes"))
       .select(col("vec_id"), col("a._1").as("cell"), col("codes"),
         col("a._2").as("d"))
-  }
 
   /** Query side of IVF-PQ over an already-encoded (vec_id, cell, codes)
     * frame — `codes` may be freshly built (ivfPqTopK) or scanned back
@@ -1142,10 +1115,7 @@ object Similarity {
             val cs = r.getSeq[Int](2)
             byCell.getOrElse(r.getInt(1), Array.empty[Int]).foreach { qi =>
               if (vid != qids(qi)) {
-                val dt = dtables(qi)
-                var d = 0.0; var m = 0
-                while (m < cs.length) { d += dt(m)(cs(m)); m += 1 }
-                best(qi).add((roundHalfUp(d, 6), vid))
+                best(qi).add((roundHalfUp(adcDist(dtables(qi), cs), 6), vid))
                 if (best(qi).size > width) best(qi).poll()
               }
             }
@@ -1274,7 +1244,7 @@ object Similarity {
     val b = withNorm(emb, "vec_id", "embedding")
       .select(col("vec_id").as("vec_b"), col("v").as("vb"), col("nrm").as("nb"))
     a.crossJoin(b).filter(col("vec_a") < col("vec_b"))
-      .withColumn("cos", round(dot(col("va"), col("vb")) / (col("na") * col("nb")), 4))
+      .withColumn("cos", roundedCos("va", "vb", "na", "nb"))
       .filter(col("cos") >= threshold)
       .select(col("vec_a"), col("vec_b"), col("cos"))
   }
@@ -1352,32 +1322,18 @@ object Similarity {
   def semDedup(emb: DataFrame, threshold: Double, k: Int = 16,
       iters: Int = 2, cosRound: Int = 4): DataFrame = {
     val cents = lloydCentroids(emb, k, iters)
-    val assignD = udf((v: Seq[Double]) => {
-      var best = 0; var bestD = Double.MaxValue; var c = 0
-      while (c < cents.length) {
-        var d = 0.0; var i = 0
-        val cv = cents(c)
-        while (i < cv.length) { val x = v(i) - cv(i); d += x * x; i += 1 }
-        if (d < bestD) { bestD = d; best = c }
-        c += 1
-      }
-      best
-    })
     // the assignment subtree feeds BOTH join sides and the final
     // projection — localCheckpoint computes the UDF pass once instead
-    // of 3x (the winnow-fps precedent)
-    val asg = Checkpoints.stage(
-      withNorm(emb, "vec_id", "embedding")
-        .withColumn("cell", assignD(col("v"))),
-      eager = true)
+    // of 3x (the winnow-fps precedent). The argmin reads the float
+    // vector back from `v` (float → double → float is exact).
+    val asg = Checkpoints.stage(withNormCell(emb, cents), eager = true)
     val a = asg.select(col("vec_id"), col("cell"),
       col("v").as("va"), col("nrm").as("na"))
     val b = asg.select(col("vec_id").as("vec_b"), col("cell"),
       col("v").as("vb"), col("nrm").as("nb"))
     val dups = a.join(b, Seq("cell"))
       .filter(col("vec_b") < col("vec_id"))
-      .withColumn("cos",
-        round(dot(col("va"), col("vb")) / (col("na") * col("nb")), cosRound))
+      .withColumn("cos", roundedCos("va", "vb", "na", "nb", cosRound))
       .filter(col("cos") >= threshold)
       .groupBy(col("vec_id"))
       .agg(count(lit(1)).as("n_dups"))
@@ -1425,7 +1381,7 @@ object Similarity {
         col("nrm").as("na")), "vec_a")
       .join(base.select(col("vec_id").as("vec_b"), col("v").as("vb"),
         col("nrm").as("nb")), "vec_b")
-      .withColumn("cos", round(dot(col("va"), col("vb")) / (col("na") * col("nb")), 4))
+      .withColumn("cos", roundedCos("va", "vb", "na", "nb"))
       .filter(col("cos") >= threshold)
       .select(col("vec_a"), col("vec_b"), col("cos"))
   }

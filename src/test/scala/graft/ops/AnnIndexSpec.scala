@@ -38,6 +38,27 @@ class AnnIndexSpec extends SparkSpecBase {
       s"expected cell=N partition dirs, got ${cells.mkString(",")}")
   }
 
+  test("save writes each cell as one codes file; probes are unchanged") {
+    val d = java.nio.file.Files.createTempDirectory("graft_annix_files")
+      .toFile.getAbsolutePath
+    // four scan tasks, each holding vectors of most cells
+    AnnIndex.save(emb.repartition(4), d)
+    val vdir = AnnIndex.resolveDir(spark, d)
+    val cells = new java.io.File(s"$vdir/codes").listFiles()
+      .filter(f => f.isDirectory && f.getName.startsWith("cell="))
+    assert(cells.length > 1)
+    cells.foreach { c =>
+      val files = c.listFiles().map(_.getName)
+        .filter(n => n.startsWith("part-") && n.endsWith(".parquet"))
+      assert(files.length == 1, s"${c.getName}: ${files.mkString(", ")}")
+    }
+    val mem = Similarity.ivfPqTopK(emb, queries, 5)
+      .orderBy("query_id", "rk").collect().toSeq
+    val ix = AnnIndex.topK(spark, d, emb, queries, 5)
+      .orderBy("query_id", "rk").collect().toSeq
+    assert(ix == mem)
+  }
+
   test("rebuild publishes atomically: versioned commit, reader isolation") {
     val d = java.nio.file.Files.createTempDirectory("graft_annix_ver")
       .toFile.getAbsolutePath

@@ -74,11 +74,11 @@ class PlanGuardSpec extends SparkSpecBase {
   //
   // Loop-round caveat: stages compiled with `keepPartitioning` run in
   // the loop-compile session clone, whose listener manager is a copy
-  // taken when the clone was made, so plansOf does not capture them. The binding regression gate for
-  // the graph family's edge derivation is the two-staged oracle: it
-  // reads the ADAPTIVE pair parquet, so an edge-derivation swap back to
-  // the O(N²) test oracle changes the result set and fails CORRECTNESS,
-  // not just a plan lint.
+  // taken when the clone was made, so plansOf does not capture them.
+  // The binding regression gate for the graph family's edge derivation
+  // is the two-staged oracle: it reads the ADAPTIVE pair parquet, so an
+  // edge-derivation swap back to the O(N²) test oracle changes the
+  // result set and fails CORRECTNESS, not just a plan lint.
 
   // No registered query is permitted a CartesianProduct today. If a
   // deliberate one ever becomes necessary, it must be named here WITH a
@@ -173,7 +173,8 @@ class PlanGuardSpec extends SparkSpecBase {
     }
   }
 
-  test("default-deny: every BroadcastNestedLoopJoin broadcasts a bounded side") {
+  test("default-deny: every BroadcastNestedLoopJoin broadcasts a " +
+      "bounded side") {
     import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
     graft.SparkEntry.queries.keys.toSeq.sorted.foreach { q =>
       val unbounded = allNodes(q).collect {
